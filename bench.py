@@ -18,7 +18,7 @@ of 2-3x on the dedup family (the same query measured 3.2 s and 8.7 s in
 back-to-back fresh runs when only the first query's subtree was
 warmed). Steady-state numbers are the reproducible ones, and they are
 what a long-lived cluster session observes. The warm pass also builds
-the once-per-corpus derived-stream cache (plans/llm._materialized), so
+the once-per-corpus derived artifacts (plans/artifacts.stage), so
 the timed pass measures the engine, not fixture materialization.
 """
 

@@ -509,7 +509,6 @@ def dup_groups(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
-    algorithm: str = "label_prop",
     simple_pairs: bool = False,
 ) -> DataFrame:
     """Assemble near-duplicate pairs into groups: connected components
@@ -521,13 +520,6 @@ def dup_groups(
     O(component diameter) rounds; dedup graphs are near-cliques so this
     is a handful. ``localCheckpoint`` truncates the growing loop lineage
     (at cluster scale: ``checkpoint`` to reliable storage).
-
-    ``algorithm='star'`` switches to alternating large-star/small-star
-    [Kiveris et al., "Connected Components in MapReduce and Beyond",
-    CIKM 2014]: rounds scale with log(component size), not diameter —
-    the escape hatch for skewed mega-components (long chains, hub
-    graphs) where label propagation pays O(diameter) rounds. Both
-    algorithms return identical rows (pinned in tests).
 
     ``simple_pairs=True`` asserts the input is already one DISTINCT row
     per unordered pair with ``id_a < id_b`` (every registered pair
@@ -543,10 +535,6 @@ def dup_groups(
     Output: ``id, group_id, group_size`` for every vertex in ``pairs``
     (``group_id`` = min id in the component).
     """
-    if algorithm == "star":
-        return _dup_groups_star(pairs, id_a, id_b, max_iter)
-    if algorithm != "label_prop":
-        raise ValueError(f"unknown connected-components algorithm: {algorithm}")
     # symmetrize with one explode, not union(fwd, rev): a union scans the
     # upstream pair pipeline (often an expensive similarity join) once
     # per branch, an explode scans it once.
@@ -561,172 +549,57 @@ def dup_groups(
     if not simple_pairs:
         edges = edges.distinct()
     edges = edges.persist()
-    labels = (
-        edges.select(F.col("s").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint()
-    )
     from pyspark.sql import Observation
 
     changed = 0
-    for i in range(max_iter):
-        prop = (
-            edges.join(labels, edges["s"] == labels["id"])
-            .groupBy("d")
-            .agg(F.min("label").alias("nlabel"))
-            .withColumnRenamed("d", "id")
-        )
-        # the changed-count rides the eager checkpoint as an Observation
-        # (one job per round, not checkpoint + count — measured r11:
-        # the convergence count was a full second job per round whose
-        # only output was one scalar)
-        obs = Observation(f"dup_groups_changed_{i}")
-        new_labels = (
-            labels.withColumnRenamed("label", "old")
-            .join(prop, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("old"), F.coalesce("nlabel", "old")).alias("label"),
-                "old",
-            )
-            .observe(
-                obs,
-                F.sum((F.col("label") != F.col("old")).cast("long")).alias("n"),
-            )
+    # the labels below are eagerly checkpointed, so nothing downstream
+    # reads the cached edge set: release it on every exit, errors too
+    try:
+        labels = (
+            edges.select(F.col("s").alias("id"))
+            .distinct()
+            .withColumn("label", F.col("id"))
             .localCheckpoint()
         )
-        changed = int(obs.get["n"] or 0)
-        labels = new_labels.drop("old")
-        if changed == 0:
-            break
-    edges.unpersist()
+        for i in range(max_iter):
+            prop = (
+                edges.join(labels, edges["s"] == labels["id"])
+                .groupBy("d")
+                .agg(F.min("label").alias("nlabel"))
+                .withColumnRenamed("d", "id")
+            )
+            # the changed-count rides the eager checkpoint as an Observation
+            # (one job per round, not checkpoint + count — measured r11:
+            # the convergence count was a full second job per round whose
+            # only output was one scalar)
+            obs = Observation(f"dup_groups_changed_{i}")
+            new_labels = (
+                labels.withColumnRenamed("label", "old")
+                .join(prop, "id", "left")
+                .select(
+                    "id",
+                    F.least(F.col("old"), F.coalesce("nlabel", "old")).alias("label"),
+                    "old",
+                )
+                .observe(
+                    obs,
+                    F.sum((F.col("label") != F.col("old")).cast("long")).alias("n"),
+                )
+                .localCheckpoint()
+            )
+            changed = int(obs.get["n"] or 0)
+            labels = new_labels.drop("old")
+            if changed == 0:
+                break
+    finally:
+        edges.unpersist()
     if changed != 0:
         raise RuntimeError(
             f"dup_groups did not converge within max_iter={max_iter} rounds "
             f"({changed} labels still changing): the component diameter "
-            f"exceeds the round budget — raise max_iter or use "
-            f"algorithm='star' (rounds scale with log(size), not diameter)"
+            f"exceeds the round budget — raise max_iter (min-label propagation "
+            f"needs one round per hop of the component diameter)"
         )
-    w = Window.partitionBy("label")
-    return labels.select(
-        "id",
-        F.col("label").alias("group_id"),
-        F.count(F.lit(1)).over(w).cast("long").alias("group_size"),
-    )
-
-
-def _dup_groups_star(
-    pairs: DataFrame, id_a: str, id_b: str, max_iter: int
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris
-    et al., CIKM 2014). Each large-star hooks every neighbor larger than
-    a node to the neighborhood minimum; each small-star re-hooks the
-    smaller neighbors. Component trees flatten geometrically, so
-    convergence takes O(log n) rounds regardless of diameter — the
-    mega-component shape (a 10k-node chain, a hub-and-spokes crawl
-    graph) where min-label propagation needs O(diameter) rounds.
-
-    Every per-node reduction is a partial-aggregated groupBy min (no
-    posting list is forced into one partition before reduction);
-    convergence is detected by a (count, hash-sum) fingerprint of the
-    edge set — two driver scalars per round, no edge-set subtract.
-    """
-    verts = None
-    edges = (
-        pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("d"))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-        .localCheckpoint()
-    )
-    verts = (
-        edges.select(F.col("s").alias("id"))
-        .unionByName(edges.select(F.col("d").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def fingerprint(e: DataFrame) -> tuple[int, int]:
-        # xor-fold (order-insensitive, overflow-free under ANSI mode)
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(s, d))"), F.lit(0)).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
-
-    def large_star(e: DataFrame) -> DataFrame:
-        sym = e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("s"), F.col("d")),
-                    F.struct(F.col("d").alias("s"), F.col("s").alias("d")),
-                )
-            ).alias("p")
-        ).select("p.s", "p.d")
-        m = (
-            sym.groupBy("s")
-            .agg(F.min("d").alias("__mind"))
-            .select("s", F.least("__mind", "s").alias("m"))
-        )
-        return (
-            sym.join(m, "s")
-            .filter(F.col("d") > F.col("s"))
-            .select(F.col("d").alias("s"), F.col("m").alias("d"))
-            .filter(F.col("s") != F.col("d"))
-            .distinct()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        oriented = e.select(
-            F.greatest("s", "d").alias("s"), F.least("s", "d").alias("d")
-        )
-        m = oriented.groupBy("s").agg(F.min("d").alias("m"))
-        hooked = oriented.join(m, "s").select(
-            F.col("d").alias("s"), F.col("m").alias("d")
-        )
-        return (
-            hooked.unionByName(m.select("s", F.col("m").alias("d")))
-            .filter(F.col("s") != F.col("d"))
-            .distinct()
-        )
-
-    from pyspark.sql import Observation
-
-    fp = fingerprint(edges)
-    converged = False
-    for i in range(max_iter):
-        # the convergence fingerprint rides the eager checkpoint as an
-        # Observation (same one-job-per-round rationale as label_prop)
-        obs = Observation(f"dup_groups_star_fp_{i}")
-        edges = (
-            small_star(large_star(edges))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.expr("bit_xor(xxhash64(s, d))"), F.lit(0)).alias(
-                    "h"
-                ),
-            )
-            .localCheckpoint()
-        )
-        row = obs.get
-        new_fp = (int(row["n"]), int(row["h"]))
-        if new_fp == fp:
-            converged = True
-            break
-        fp = new_fp
-    if not converged:
-        raise RuntimeError(
-            f"star connected-components did not converge within "
-            f"max_iter={max_iter} rounds"
-        )
-    # at the fixed point edges form (child, root) stars; roots have no
-    # outgoing edge and label themselves
-    labels = (
-        verts.join(edges, verts["id"] == edges["s"], "left")
-        .groupBy("id")
-        .agg(F.min(F.coalesce("d", "id")).alias("label"))
-    )
     w = Window.partitionBy("label")
     return labels.select(
         "id",

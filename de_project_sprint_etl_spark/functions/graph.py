@@ -250,9 +250,7 @@ SELECT node, CAST(MIN(d) AS INT) AS dist FROM reach GROUP BY node
 # --- triangle counting ------------------------------------------------------
 
 
-def label_propagation(
-    edges: DataFrame, rounds: int = 3, early_exit: bool = False
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007), fully
     deterministic: every node starts labeled with its own id; each
     round, a node adopts its neighbors' MOST FREQUENT current label,
@@ -271,23 +269,7 @@ def label_propagation(
     repartition+persist round-trip; at a real 100 TB run the edges
     would be bucketed on dst once, pagerank's stationary-adjacency
     discipline). Expects a symmetric edge set (every node appears as
-    ``src``). Output: ``node, community``.
-
-    ``early_exit=True`` stops as soon as a round reproduces the
-    previous round's labels (per-round eager checkpoint + the CC
-    xor-fingerprint from dedup.connected_components): synchronous LPA
-    is a deterministic function of the label frame, so a repeated frame
-    is a fixed point and every remaining round is the identity. The
-    repeat test is PROBABILISTIC — (count, bit_xor(xxhash64(node,lbl)))
-    equality, so a 64-bit xor collision between consecutive non-equal
-    frames would truncate propagation early (~2^-64 per round; an exact
-    anti-join comparison is the collision-free alternative at one extra
-    join per round). Off by default
-    because on a still-mixing graph (the bench copurchase graph does
-    not converge within 3 rounds at sf0.1 or sf1 — measured r9) the
-    per-round fingerprint jobs are pure overhead; turn it on when
-    ``rounds`` is sized for the worst component and typical corpora
-    converge sooner."""
+    ``src``). Output: ``node, community``."""
     adj = edges
     labels = adj.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
@@ -306,7 +288,6 @@ def label_propagation(
     # vote per (node, lbl) per neighbor).
     _shift = F.lit(1 << 32).cast("long")
     _mask = F.lit((1 << 32) - 1).cast("long")
-    prev_fp: tuple[int, int] | None = None
     for _ in range(rounds):
         nl = adj.join(
             labels.select(F.col("node").alias("dst"), "lbl"), "dst"
@@ -330,18 +311,6 @@ def label_propagation(
             .agg(F.max(packed).alias("m"))
             .select("node", (_mask - (F.col("m") % _shift)).alias("lbl"))
         )
-        if early_exit:
-            labels = labels.localCheckpoint(eager=True)
-            row = labels.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.expr("bit_xor(xxhash64(node, lbl))"), F.lit(0)
-                ).alias("h"),
-            ).collect()[0]
-            fp = (int(row["n"]), int(row["h"]))
-            if fp == prev_fp:
-                break
-            prev_fp = fp
     return labels.select("node", F.col("lbl").cast("long").alias("community"))
 
 

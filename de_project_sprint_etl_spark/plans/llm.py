@@ -24,9 +24,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from de_project_sprint_etl_spark.functions import dedup, embeddings, media, similarity, text
-from de_project_sprint_etl_spark.functions.caching import cached_generation
+from de_project_sprint_etl_spark.functions.caching import (
+    cached_generation,
+    session_scoped_value,
+)
 from de_project_sprint_etl_spark.functions.text import SQL_NORM, sql_h64
 from de_project_sprint_etl_spark.sources import incremental
+from de_project_sprint_etl_spark.plans import artifacts
 from de_project_sprint_etl_spark.plans.registry import register
 from de_project_sprint_etl_spark.plans.testdata import events_df, t
 
@@ -84,42 +88,15 @@ def docs_fanned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # keeps each query self-contained but pays the regex/shingle/explode
 # subtree N times per session. At 100 TB these streams are pipeline
 # *stages* — shingle once, materialize, reuse — so the engine does the
-# same here: each stream is written to parquet once per (sf_dir, source
-# fingerprint) and later queries scan it. Results are bit-identical to
-# the inline derivation (a deterministic projection round-tripped
-# through parquet); the DuckDB oracles still derive everything from the
-# raw `documents` table, so the correctness gate also checks the cache.
+# same here: each stream is a plans/artifacts stage over the documents
+# table, written once per corpus generation and scanned by later
+# queries. Results are bit-identical to the inline derivation (a
+# deterministic projection round-tripped through parquet); the DuckDB
+# oracles still derive everything from the raw `documents` table, so
+# the correctness gate also checks the cache.
 
-_CACHE_ROOT = str(Path(__file__).resolve().parents[2] / ".cache" / "derived")
-
-
-_READ_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
-def _artifact_path(sf_dir: str, name: str) -> Path:
-    """Stage-artifact directory for ``name``, keyed by the corpus
-    fingerprint (documents.parquet mtime+size) — a regenerated fixture
-    can never serve a stale artifact."""
-    src = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = sf_dir.strip("/").replace("/", "_")
-    return Path(_CACHE_ROOT) / f"{key}-{src.st_mtime_ns}-{src.st_size}" / name
-
-
-def _read_artifact(spark: SparkSession, path: Path) -> DataFrame:
-    rkey = (id(spark), str(path))
-    if rkey not in _READ_CACHE:
-        _READ_CACHE[rkey] = fan_out(spark, spark.read.parquet(str(path)))
-    return _READ_CACHE[rkey]
-
-
-def _materialized(
-    spark: SparkSession, sf_dir: str, name: str, build
-) -> DataFrame:
-    path = _artifact_path(sf_dir, name)
-    if not (path / "_SUCCESS").exists():
-        build().write.mode("overwrite").parquet(str(path))
-        _READ_CACHE.pop((id(spark), str(path)), None)
-    return _read_artifact(spark, path)
+#: the fixture tables every corpus-derived artifact below is built from
+DOCS = ("documents",)
 
 
 def _docs_with_mutants_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -151,21 +128,28 @@ def docs_with_mutants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents ∪ near-duplicate mutants: every 5th doc re-appears with
     id+100000 and its first two normalized tokens dropped (materialized
     once per corpus, see above)."""
-    return _materialized(
-        spark, sf_dir, "docs_mut", lambda: _docs_with_mutants_plan(spark, sf_dir)
+    return artifacts.stage(
+        spark,
+        sf_dir,
+        "docs_mut",
+        DOCS,
+        lambda: _docs_with_mutants_plan(spark, sf_dir),
+        wrap=fan_out,
     )
 
 
 def mutant_shingles(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     """(id, shingle) stream of the mutant corpus, distinct per doc —
     the shared input of the ngram-Jaccard and MinHash passes."""
-    return _materialized(
+    return artifacts.stage(
         spark,
         sf_dir,
         f"shingles_n{n}",
+        DOCS,
         lambda: dedup._exploded_shingles(
             _docs_with_mutants_plan(spark, sf_dir), "text", "doc_id", n
         ),
+        wrap=fan_out,
     )
 
 
@@ -183,7 +167,7 @@ def mutant_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.length("tok") > 0)
         )
 
-    return _materialized(spark, sf_dir, "tokens", build)
+    return artifacts.stage(spark, sf_dir, "tokens", DOCS, build, wrap=fan_out)
 
 
 def ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,16 +182,18 @@ def ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic output round-tripped through parquet); every
     consumer's DuckDB oracle still re-derives pairs from raw
     ``documents``, so the cache sits inside the correctness gate."""
-    return _materialized(
+    return artifacts.stage(
         spark,
         sf_dir,
         "ngram_pairs_n3_j03",
+        DOCS,
         lambda: dedup.ngram_jaccard_pairs(
             shingles=mutant_shingles(spark, sf_dir, n=3),
             n=3,
             min_jaccard=0.3,
             max_shingle_df=_MAX_SHINGLE_DF,
         ),
+        wrap=fan_out,
     )
 
 
@@ -217,10 +203,11 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ngram_pairs``: the banded dedup produces this table once; the
     cross-dup matrix, leakage check, cluster-quality report and eval
     queries scan it instead of re-mining candidates per report."""
-    return _materialized(
+    return artifacts.stage(
         spark,
         sf_dir,
         "mh_pairs_16x4_j05",
+        DOCS,
         # persist_input=False: the signature input IS a written artifact
         # scan — persisting it would poison every other consumer of the
         # mh_sigs_16 artifact with an InMemoryRelation substitution
@@ -231,6 +218,7 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             min_est_jaccard=0.5,
             persist_input=False,
         ),
+        wrap=fan_out,
     )
 
 
@@ -246,13 +234,15 @@ def doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet bit-exactly, and every consumer's oracle still recomputes
     the stats from raw ``documents``, so the artifact sits inside the
     correctness gate."""
-    return _materialized(
+    return artifacts.stage(
         spark,
         sf_dir,
         "doc_stats",
+        DOCS,
         lambda: text.with_text_stats(
             fan_out(spark, t(spark, sf_dir, "documents")), "text"
         ).drop("text"),
+        wrap=fan_out,
     )
 
 
@@ -260,13 +250,15 @@ def mutant_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The attributes table of the mutant corpus (same contract as
     ``doc_stats``) — the quality input of the dedup keep/report
     family."""
-    return _materialized(
+    return artifacts.stage(
         spark,
         sf_dir,
         "mut_stats",
+        DOCS,
         lambda: text.with_text_stats(
             _docs_with_mutants_plan(spark, sf_dir), "text"
         ).drop("text"),
+        wrap=fan_out,
     )
 
 
@@ -309,13 +301,15 @@ def minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-banding are cheap projections over them), which is exactly what
     makes the incremental refresh below O(|increment|): the snapshot
     side is READ, never re-signed."""
-    return _materialized(
+    return artifacts.stage(
         spark,
         sf_dir,
         "mh_sigs_16",
+        DOCS,
         lambda: dedup.minhash_signatures(
             shingles=mutant_shingles(spark, sf_dir, n=3), num_hashes=16
         ),
+        wrap=fan_out,
     )
 
 
@@ -324,16 +318,18 @@ def minhash_sigs_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the increment landed) — signed from the snapshot-filtered
     shingle stream. Signatures are per-doc, so each snapshot doc's
     signature is identical to its full-corpus one."""
-    return _materialized(
+    return artifacts.stage(
         spark,
         sf_dir,
         "mh_sigs_snap_16",
+        DOCS,
         lambda: dedup.minhash_signatures(
             shingles=mutant_shingles(spark, sf_dir, n=3).filter(
                 F.col("id") < MUT_OFFSET
             ),
             num_hashes=16,
         ),
+        wrap=fan_out,
     )
 
 
@@ -341,10 +337,11 @@ def minhash_pairs_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SNAPSHOT's pair artifact — near-dup pairs among the original
     documents only ('yesterday's' pair table, before the increment
     landed), banded from the snapshot signature artifact."""
-    return _materialized(
+    return artifacts.stage(
         spark,
         sf_dir,
         "mh_pairs_snap_16x4_j05",
+        DOCS,
         # persist_input=False: artifact-scan input (see minhash_pairs)
         lambda: dedup.minhash_lsh_pairs(
             minhash_sigs_snapshot(spark, sf_dir),
@@ -353,26 +350,8 @@ def minhash_pairs_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             min_est_jaccard=0.5,
             persist_input=False,
         ),
+        wrap=fan_out,
     )
-
-
-def _refreshed_artifact(spark: SparkSession, sf_dir: str, name: str,
-                        build_writes) -> DataFrame:
-    """Run ``build_writes(path)`` (a multi-step overwrite+append write
-    sequence) once per corpus, gated on a marker touched only AFTER the
-    last write — parquet's own _SUCCESS lands after the FIRST write, so
-    gating on it could serve a half-refreshed table after a crash
-    between the two steps. Still used where the refreshed table is a
-    REWRITE by nature (dup groups: membership of old rows changes);
-    append-shaped refreshes use the manifest-gated in-place views
-    below."""
-    path = _artifact_path(sf_dir, name)
-    done = path / "_REFRESH_COMPLETE"
-    if not done.exists():
-        build_writes(path)
-        done.touch()
-        _READ_CACHE.pop((id(spark), str(path)), None)
-    return _read_artifact(spark, path)
 
 
 def _view_artifact(
@@ -394,35 +373,26 @@ def _view_artifact(
     (idempotence = the manifest tag; a crash between the delta write
     and the manifest publish leaves the previous generation served —
     sources/incremental.py). The returned DataFrame is the committed
-    view; the read-side cache is keyed by the view's generation so a
-    new commit invalidates it."""
-    root = _artifact_path(sf_dir, name)
+    view, memoized per session under its manifest commit id (a new
+    commit, or a lost-manifest recovery that re-commits at the SAME
+    generation with fresh part files, re-lists; the superseded cid's
+    entry is dropped)."""
+    root = artifacts.path(sf_dir, name, DOCS)
     incremental.init_view(
-        root, [str(_artifact_path(sf_dir, a)) for a in base_artifacts]
+        root, [str(artifacts.path(sf_dir, a, DOCS)) for a in base_artifacts]
     )
     if not incremental.has_tag(root, tag):
         data, deletes = build_delta()
         incremental.append_delta(data, root, tag=tag, deletes=deletes)
-    # keyed by the manifest's unique commit id, not the generation
-    # number: a lost-manifest recovery re-commits at the SAME gen with
-    # fresh part files, and a gen-keyed cache would serve the dead plan
     man = incremental.read_manifest(root)
-    rkey = (id(spark), f"{root}::{man.get('cid', man['gen'])}")
-    if rkey not in _READ_CACHE:
-        # evict superseded generations of THIS view (a long-lived
-        # session committing daily refreshes would otherwise retain one
-        # dead plan per old cid — the bare-persist leak shape
-        # functions/caching.py exists to bound)
-        prefix = f"{root}::"
-        for k in [
-            k for k in _READ_CACHE
-            if isinstance(k[1], str) and k[1].startswith(prefix)
-        ]:
-            _READ_CACHE.pop(k, None)
-        _READ_CACHE[rkey] = fan_out(
+    return session_scoped_value(
+        "artifacts",
+        spark,
+        (str(root), man.get("cid", man["gen"])),
+        lambda: fan_out(
             spark, incremental.read_view(spark, root, columns=columns)
-        )
-    return _READ_CACHE[rkey]
+        ),
+    )
 
 
 def minhash_refresh_delta(
@@ -612,13 +582,13 @@ def init_minhash_soak(
     (sigs_root, pairs_root)."""
     minhash_sigs_snapshot(spark, sf_dir)
     minhash_pairs_snapshot(spark, sf_dir)
-    sigs_root = _artifact_path(sf_dir, f"mh_sigs_{suffix}")
-    pairs_root = _artifact_path(sf_dir, f"mh_pairs_{suffix}")
+    sigs_root = artifacts.path(sf_dir, f"mh_sigs_{suffix}", DOCS)
+    pairs_root = artifacts.path(sf_dir, f"mh_pairs_{suffix}", DOCS)
     incremental.init_view(
-        sigs_root, [str(_artifact_path(sf_dir, "mh_sigs_snap_16"))]
+        sigs_root, [str(artifacts.path(sf_dir, "mh_sigs_snap_16", DOCS))]
     )
     incremental.init_view(
-        pairs_root, [str(_artifact_path(sf_dir, "mh_pairs_snap_16x4_j05"))]
+        pairs_root, [str(artifacts.path(sf_dir, "mh_pairs_snap_16x4_j05", DOCS))]
     )
     return sigs_root, pairs_root
 
@@ -643,16 +613,18 @@ def _ngram_pairs_snapshot_at(
 ) -> DataFrame:
     """'Yesterday's' exact-pair table at an arbitrary cut (the
     registered-query snapshot is the cut=_INC_NGRAM_CUT case)."""
-    return _materialized(
+    return artifacts.stage(
         spark,
         sf_dir,
         f"ngram_pairs_snap_n3_c{cut}",
+        DOCS,
         lambda: dedup.ngram_jaccard_pairs(
             shingles=snapshot_shingles(spark, sf_dir),
             n=3,
             min_jaccard=0.3,
             max_shingle_df=cut,
         ),
+        wrap=fan_out,
     )
 
 
@@ -660,11 +632,13 @@ def snapshot_shingles_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The snapshot (id, shingle) stream as its OWN written artifact —
     the view-base form of ``snapshot_shingles`` (a view member must be
     a parquet directory, not a filter plan)."""
-    return _materialized(
+    return artifacts.stage(
         spark,
         sf_dir,
         "shingles_snap_n3",
+        DOCS,
         lambda: snapshot_shingles(spark, sf_dir),
+        wrap=fan_out,
     )
 
 
@@ -679,18 +653,18 @@ def init_ngram_soak(
     _ngram_pairs_snapshot_at(spark, sf_dir, cut)
     snapshot_shingles_artifact(spark, sf_dir)
     ngram_census_snapshot(spark, sf_dir)
-    pairs_root = _artifact_path(sf_dir, f"ngram_pairs_{suffix}_c{cut}")
-    stream_root = _artifact_path(sf_dir, f"ngram_stream_{suffix}")
-    census_root = _artifact_path(sf_dir, f"ngram_census_{suffix}")
+    pairs_root = artifacts.path(sf_dir, f"ngram_pairs_{suffix}_c{cut}", DOCS)
+    stream_root = artifacts.path(sf_dir, f"ngram_stream_{suffix}", DOCS)
+    census_root = artifacts.path(sf_dir, f"ngram_census_{suffix}", DOCS)
     incremental.init_view(
         pairs_root,
-        [str(_artifact_path(sf_dir, f"ngram_pairs_snap_n3_c{cut}"))],
+        [str(artifacts.path(sf_dir, f"ngram_pairs_snap_n3_c{cut}", DOCS))],
     )
     incremental.init_view(
-        stream_root, [str(_artifact_path(sf_dir, "shingles_snap_n3"))]
+        stream_root, [str(artifacts.path(sf_dir, "shingles_snap_n3", DOCS))]
     )
     incremental.init_view(
-        census_root, [str(_artifact_path(sf_dir, "ngram_census_snap_n3"))]
+        census_root, [str(artifacts.path(sf_dir, "ngram_census_snap_n3", DOCS))]
     )
     return pairs_root, stream_root, census_root
 
@@ -779,13 +753,15 @@ def ngram_soak_step(
 def dup_groups_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'Yesterday's' dup-group table — connected components over the
     snapshot's pair artifact only."""
-    return _materialized(
+    return artifacts.stage(
         spark,
         sf_dir,
         "mh_groups_snap",
+        DOCS,
         lambda: dedup.dup_groups(
             minhash_pairs_snapshot(spark, sf_dir), simple_pairs=True
         ),
+        wrap=fan_out,
     )
 
 
@@ -804,7 +780,7 @@ def refresh_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     full pair graph; the full-rebuild CC never touches the snapshot
     pairs again."""
 
-    def build(path):
+    def build() -> DataFrame:
         snap = dup_groups_snapshot(spark, sf_dir)
         star = snap.filter(F.col("id") != F.col("group_id")).select(
             F.col("group_id").alias("id_a"), F.col("id").alias("id_b")
@@ -817,13 +793,11 @@ def refresh_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         # star edges are (group_id < id, one row per member); new pairs
         # are distinct with id_b >= MUT_OFFSET > every snapshot id, so the
         # union stays one distinct row per unordered pair with id_a < id_b
-        dedup.dup_groups(
-            star.unionByName(new_pairs), simple_pairs=True
-        ).write.mode(
-            "overwrite"
-        ).parquet(str(path))
+        return dedup.dup_groups(star.unionByName(new_pairs), simple_pairs=True)
 
-    return _refreshed_artifact(spark, sf_dir, "mh_groups_refreshed", build)
+    return artifacts.stage(
+        spark, sf_dir, "mh_groups_refreshed", DOCS, build, wrap=fan_out
+    )
 
 
 SQL_DOCS_MUT = f"""
@@ -1380,7 +1354,7 @@ def q_incremental_time_travel(
     j?'). History lives in the live manifest, so the query also pins
     that the refresh chain never compacts implicitly."""
     refresh_mutant_stats(spark, sf_dir)  # ensure the refresh committed
-    root = _artifact_path(sf_dir, "mut_stats_refreshed")
+    root = artifacts.path(sf_dir, "mut_stats_refreshed", DOCS)
     return incremental.read_view(
         spark, root, columns=["doc_id", *STAT_COLS], as_of_gen=0
     )
@@ -1422,29 +1396,33 @@ def ngram_census_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-cut — the refresh must distinguish brand-new shingles from
     already-hot ones). Vocabulary-shaped; the stored statistic the
     df-merge reads instead of re-counting the snapshot."""
-    return _materialized(
+    return artifacts.stage(
         spark,
         sf_dir,
         "ngram_census_snap_n3",
+        DOCS,
         lambda: snapshot_shingles(spark, sf_dir)
         .groupBy("shingle")
         .agg(F.count(F.lit(1)).cast("long").alias("df")),
+        wrap=fan_out,
     )
 
 
 def ngram_pairs_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'Yesterday's' exact-Jaccard pair table — PPJoin over the
     snapshot only, at the refresh family's tight df cut."""
-    return _materialized(
+    return artifacts.stage(
         spark,
         sf_dir,
         f"ngram_pairs_snap_n3_c{_INC_NGRAM_CUT}",
+        DOCS,
         lambda: dedup.ngram_jaccard_pairs(
             shingles=snapshot_shingles(spark, sf_dir),
             n=3,
             min_jaccard=0.3,
             max_shingle_df=_INC_NGRAM_CUT,
         ),
+        wrap=fan_out,
     )
 
 
@@ -1816,11 +1794,10 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per corpus) the partitionBy(cell) IVF index under the
-    derived-stream cache; keyed like _materialized."""
-    src = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    key = sf_dir.strip("/").replace("/", "_")
-    path = Path(_CACHE_ROOT) / f"{key}-emb-{src.st_mtime_ns}-{src.st_size}" / "ivf_index"
+    """Build (once per corpus) the partitionBy(cell) IVF index as a
+    plans/artifacts directory over the embeddings table (the probe
+    reads the directory itself, so only its path is staged)."""
+    path = artifacts.path(sf_dir, "ivf_index", ("embeddings",))
     if not (path / "_SUCCESS").exists():
         emb = fan_out(spark, t(spark, sf_dir, "embeddings"))
         similarity.build_ivf_index(

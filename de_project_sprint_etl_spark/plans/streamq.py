@@ -28,10 +28,14 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from de_project_sprint_etl_spark.plans.llm import _CACHE_ROOT, SESSION_GAP_US
+from de_project_sprint_etl_spark.plans import artifacts
+from de_project_sprint_etl_spark.plans.llm import SESSION_GAP_US
 from de_project_sprint_etl_spark.plans.registry import register
 from de_project_sprint_etl_spark.plans.testdata import events_df
 from de_project_sprint_etl_spark.streaming import jobs
+
+#: the fixture table every stream source below is derived from
+EVENTS = ("events",)
 
 _SINK_SEQ = itertools.count()
 #: last (memory-sink table, checkpoint dir) per (session, query tag) —
@@ -83,15 +87,9 @@ def _run_to_sink(spark: SparkSession, tag: str, stream: DataFrame,
 
 
 def _events_stream_src(spark: SparkSession, sf_dir: str) -> str:
-    """One-file parquet copy of the decoded events table, cached per
-    corpus generation (same keying as plans/llm._materialized)."""
-    src = os.stat(os.path.join(sf_dir, "events.parquet"))
-    key = sf_dir.strip("/").replace("/", "_")
-    path = (
-        Path(_CACHE_ROOT)
-        / f"{key}-events-{src.st_mtime_ns}-{src.st_size}"
-        / "stream_src"
-    )
+    """One-file parquet copy of the decoded events table (a
+    plans/artifacts directory over ``events``)."""
+    path = artifacts.path(sf_dir, "events_stream_src", EVENTS)
     if not (path / "_SUCCESS").exists():
         events_df(spark, sf_dir).coalesce(1).write.mode("overwrite").parquet(
             str(path)
@@ -367,15 +365,9 @@ _GEN_N = _GEN_SHARDS * _GEN_ROWS
 def _events_dup_stream_src(spark: SparkSession, sf_dir: str) -> str:
     """At-least-once events feed: the decoded events table UNION an
     identical replay of every 7th event (by id) — the deterministic
-    stand-in for a source that re-delivers on retry. One file, cached
-    per corpus generation."""
-    src = os.stat(os.path.join(sf_dir, "events.parquet"))
-    key = sf_dir.strip("/").replace("/", "_")
-    path = (
-        Path(_CACHE_ROOT)
-        / f"{key}-eventsdup-{src.st_mtime_ns}-{src.st_size}"
-        / "stream_src"
-    )
+    stand-in for a source that re-delivers on retry. One file, a
+    plans/artifacts directory over ``events``."""
+    path = artifacts.path(sf_dir, "events_dup_stream_src", EVENTS)
     if not (path / "_SUCCESS").exists():
         ev = events_df(spark, sf_dir)
         ev.unionByName(ev.filter(F.col("event_id") % 7 == 0)).coalesce(
@@ -545,17 +537,10 @@ def _retention_stream_src(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         order_log_snapshot_increment,
     )
 
-    # keyed on BOTH inputs' stats: the snapshot/increment derives from
-    # orders JOIN lineitem, so regenerating lineitem.parquet alone must
-    # invalidate too (ADVICE r5 — a stale cached stream source would
-    # silently diverge from the batch oracle)
-    src = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    li = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
-    key = sf_dir.strip("/").replace("/", "_")
-    root = Path(_CACHE_ROOT) / (
-        f"{key}-retlog-{src.st_mtime_ns}-{src.st_size}"
-        f"-{li.st_mtime_ns}-{li.st_size}"
-    )
+    # staged over BOTH tables the order log joins: regenerating
+    # lineitem.parquet alone must rebuild it too (a stale stream source
+    # would silently diverge from the batch oracle)
+    root = artifacts.path(sf_dir, "retention_stream_src", ("orders", "lineitem"))
     snap_dir, inc_dir = str(root / "snapshot"), str(root / "increment")
     if not (Path(inc_dir) / "_SUCCESS").exists():
         snapshot, increment = order_log_snapshot_increment(spark, sf_dir)
@@ -655,29 +640,23 @@ def _events_ingest_root(spark: SparkSession, sf_dir: str):
     files per micro-batch (a genuine 3-commit chain), checkpoint kept
     UNDER the view root so restarts resume offsets instead of
     re-listing."""
-    from de_project_sprint_etl_spark.plans import llm as _llm
     from de_project_sprint_etl_spark.sources import incremental
 
-    _llm._materialized(
+    artifacts.stage(
         spark,
         sf_dir,
         "events_ingest_base",
+        EVENTS,
         lambda: events_df(spark, sf_dir).limit(0),
     )
-    src = os.stat(os.path.join(sf_dir, "events.parquet"))
-    key = sf_dir.strip("/").replace("/", "_")
-    src_path = (
-        Path(_CACHE_ROOT)
-        / f"{key}-events-{src.st_mtime_ns}-{src.st_size}"
-        / "stream_src_multi"
-    )
+    src_path = artifacts.path(sf_dir, "events_stream_src_multi", EVENTS)
     if not (src_path / "_SUCCESS").exists():
         events_df(spark, sf_dir).repartition(6).write.mode(
             "overwrite"
         ).parquet(str(src_path))
-    root = _llm._artifact_path(sf_dir, "events_ingest_view")
+    root = artifacts.path(sf_dir, "events_ingest_view", EVENTS)
     incremental.init_view(
-        root, [str(_llm._artifact_path(sf_dir, "events_ingest_base"))]
+        root, [str(artifacts.path(sf_dir, "events_ingest_base", EVENTS))]
     )
     jobs.ingest_stream_into_view(
         jobs.read_event_stream(spark, str(src_path), max_files=2),

@@ -27,13 +27,11 @@ Numeric-determinism rules (so the DuckDB oracle hash-matches):
 
 from __future__ import annotations
 
-import os
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from de_project_sprint_etl_spark.operators import dims, facts, retention
+from de_project_sprint_etl_spark.plans import artifacts
 from de_project_sprint_etl_spark.plans.registry import register
 
 SPLIT_DATE = "1999-01-01"
@@ -236,31 +234,21 @@ def order_log_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return facts.merge_snapshot_increment(snapshot, increment)
 
 
-# Derived-stream materialization (same policy as plans/llm._materialized
-# for the mutant corpus): the merged order log is a PIPELINE STAGE — in
-# production it is exactly the table the order_log_v2_merge job writes —
-# so the nine cohort queries scan it instead of each re-paying the
-# lineitem ⋈ orders join. Keyed on the orders.parquet stat so a driver
-# testdata regeneration invalidates the cache.
-_DERIVED_CACHE_ROOT = str(Path(__file__).resolve().parents[2] / ".cache" / "derived")
-_DERIVED_READ_CACHE: dict[tuple[int, str], DataFrame] = {}
+# The merged order log is a PIPELINE STAGE — in production it is
+# exactly the table the order_log_v2_merge job writes — so the nine
+# cohort queries scan it as a plans/artifacts stage instead of each
+# re-paying the lineitem ⋈ orders join. Staged over both tables it
+# reads, so regenerating either one rebuilds it.
 
 
 def order_log_v2_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    key = sf_dir.strip("/").replace("/", "_")
-    path = (
-        Path(_DERIVED_CACHE_ROOT)
-        / f"{key}-log-{src.st_mtime_ns}-{src.st_size}"
-        / "order_log_v2"
+    return artifacts.stage(
+        spark,
+        sf_dir,
+        "order_log_v2",
+        ("orders", "lineitem"),
+        lambda: order_log_v2(spark, sf_dir),
     )
-    if not (path / "_SUCCESS").exists():
-        order_log_v2(spark, sf_dir).write.mode("overwrite").parquet(str(path))
-        _DERIVED_READ_CACHE.pop((id(spark), str(path)), None)
-    rkey = (id(spark), str(path))
-    if rkey not in _DERIVED_READ_CACHE:
-        _DERIVED_READ_CACHE[rkey] = spark.read.parquet(str(path))
-    return _DERIVED_READ_CACHE[rkey]
 
 
 def order_log_v2_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -292,23 +280,15 @@ def weeks_dim_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The week dimension materialized once per corpus generation (it is
     the calendar_weeks job's output — O(weeks) rows; scanning it saves
     each cohort query the 3-table date-union scan). calendar_weeks /
-    calendar_dim keep building live."""
-    src = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    key = sf_dir.strip("/").replace("/", "_")
-    path = (
-        Path(_DERIVED_CACHE_ROOT)
-        / f"{key}-log-{src.st_mtime_ns}-{src.st_size}"
-        / "weeks_dim"
+    calendar_dim keep building live. Staged over all three tables the
+    calendar unions."""
+    return artifacts.stage(
+        spark,
+        sf_dir,
+        "weeks_dim",
+        ("orders", "lineitem", "events"),
+        lambda: weeks_dim(spark, sf_dir).coalesce(1),
     )
-    if not (path / "_SUCCESS").exists():
-        weeks_dim(spark, sf_dir).coalesce(1).write.mode("overwrite").parquet(
-            str(path)
-        )
-        _DERIVED_READ_CACHE.pop((id(spark), str(path)), None)
-    rkey = (id(spark), str(path))
-    if rkey not in _DERIVED_READ_CACHE:
-        _DERIVED_READ_CACHE[rkey] = spark.read.parquet(str(path))
-    return _DERIVED_READ_CACHE[rkey]
 
 
 # --- shared SQL fragments (oracle side) ------------------------------------

@@ -42,6 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from de_project_sprint_etl_spark.plans import artifacts
 from de_project_sprint_etl_spark.plans.registry import register
 from de_project_sprint_etl_spark.plans.testdata import events_df, t
 
@@ -829,40 +830,23 @@ def q_orders_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def copurchase_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The part co-purchase edge set, materialized once per corpus
-    generation (same keying discipline as plans/llm._materialized): a
-    graph at scale is a pipeline ARTIFACT — built by one job, queried by
-    many — so pagerank/triangles scanning the edge parquet is the
-    production shape, not a shortcut. The DuckDB oracles still derive
-    the edges from raw ``lineitem``, so the cache sits inside the
-    correctness gate. Bit-identical to the inline derivation (a
-    deterministic projection round-tripped through parquet)."""
-    from pathlib import Path
+    """The part co-purchase edge set as a plans/artifacts stage over
+    ``lineitem``: a graph at scale is a pipeline ARTIFACT — built by one
+    job, queried by many — so pagerank/triangles scanning the edge
+    parquet is the production shape, not a shortcut. The DuckDB oracles
+    still derive the edges from raw ``lineitem``, so the cache sits
+    inside the correctness gate. Bit-identical to the inline derivation
+    (a deterministic projection round-tripped through parquet)."""
+    from de_project_sprint_etl_spark.plans.llm import fan_out
 
-    from de_project_sprint_etl_spark.plans.llm import _CACHE_ROOT, fan_out
-
-    src = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
-    key = sf_dir.strip("/").replace("/", "_")
-    path = (
-        Path(_CACHE_ROOT)
-        / f"{key}-li-{src.st_mtime_ns}-{src.st_size}"
-        / "copurchase_edges"
+    return artifacts.stage(
+        spark,
+        sf_dir,
+        "copurchase_edges",
+        ("lineitem",),
+        lambda: graph.copurchase_edges(t(spark, sf_dir, "lineitem")),
+        wrap=fan_out,
     )
-    if not (path / "_SUCCESS").exists():
-        graph.copurchase_edges(t(spark, sf_dir, "lineitem")).write.mode(
-            "overwrite"
-        ).parquet(str(path))
-        _EDGE_READ_CACHE.pop((id(spark), str(path)), None)
-    # memoize the scan DataFrame per (session, path): a fresh
-    # spark.read.parquet per call would defeat fan_out's id(df)-keyed
-    # decision cache and re-pay its planning probe on every invocation
-    rkey = (id(spark), str(path))
-    if rkey not in _EDGE_READ_CACHE:
-        _EDGE_READ_CACHE[rkey] = fan_out(spark, spark.read.parquet(str(path)))
-    return _EDGE_READ_CACHE[rkey]
-
-
-_EDGE_READ_CACHE: dict[tuple[int, str], DataFrame] = {}
 
 
 # --- bucketed co-located join (write-time shuffle, amortized) ---------------
@@ -1450,6 +1434,23 @@ def q_rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scoping, auto-compact rewrite — preserves values exactly.
 
 _UPSERT_COLS = ["o_orderkey", "o_orderstatus", "o_totalprice"]
+#: the fixture table the upsert base and its views are derived from
+ORDERS = ("orders",)
+
+
+def _orders_upsert_base(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The orders projection every upsert view below takes as its base
+    member (a plans/artifacts stage over ``orders``)."""
+    from de_project_sprint_etl_spark.plans.llm import fan_out
+
+    return artifacts.stage(
+        spark,
+        sf_dir,
+        "orders_upsert_base",
+        ORDERS,
+        lambda: t(spark, sf_dir, "orders").select(*_UPSERT_COLS),
+        wrap=fan_out,
+    )
 
 
 def _orders_upsert_view(spark: SparkSession, sf_dir: str):
@@ -1462,18 +1463,12 @@ def _orders_upsert_view(spark: SparkSession, sf_dir: str):
     touches). ``auto_compact_after=2`` makes compaction fire after day
     2's commit, so the read below spans a compacted member plus a live
     delta — both protocol halves in one registered plan."""
-    from de_project_sprint_etl_spark.plans import llm as _llm
     from de_project_sprint_etl_spark.sources import incremental
 
-    base = _llm._materialized(
-        spark,
-        sf_dir,
-        "orders_upsert_base",
-        lambda: t(spark, sf_dir, "orders").select(*_UPSERT_COLS),
-    )
-    root = _llm._artifact_path(sf_dir, "orders_upsert_view")
+    base = _orders_upsert_base(spark, sf_dir)
+    root = artifacts.path(sf_dir, "orders_upsert_view", ORDERS)
     incremental.init_view(
-        root, [str(_llm._artifact_path(sf_dir, "orders_upsert_base"))]
+        root, [str(artifacts.path(sf_dir, "orders_upsert_base", ORDERS))]
     )
     key = F.col("o_orderkey")
     status1 = F.when(F.col("o_orderstatus") == "P", F.lit("F")).otherwise(
@@ -1564,18 +1559,12 @@ def _orders_delete_view(spark: SparkSession, sf_dir: str):
     purges finished orders with orderkey % 3 == 0 via ``delete_where``
     — a predicate over the POST-restatement view state, which is what
     makes the two-step composition worth proving."""
-    from de_project_sprint_etl_spark.plans import llm as _llm
     from de_project_sprint_etl_spark.sources import incremental
 
-    base = _llm._materialized(
-        spark,
-        sf_dir,
-        "orders_upsert_base",
-        lambda: t(spark, sf_dir, "orders").select(*_UPSERT_COLS),
-    )
-    root = _llm._artifact_path(sf_dir, "orders_delete_view")
+    base = _orders_upsert_base(spark, sf_dir)
+    root = artifacts.path(sf_dir, "orders_delete_view", ORDERS)
     incremental.init_view(
-        root, [str(_llm._artifact_path(sf_dir, "orders_upsert_base"))]
+        root, [str(artifacts.path(sf_dir, "orders_upsert_base", ORDERS))]
     )
     key = F.col("o_orderkey")
     if not incremental.has_tag(root, "restate"):
@@ -1647,18 +1636,12 @@ def _orders_evolution_view(spark: SparkSession, sf_dir: str):
     column null — no base rewrite, no backfill job — which is the
     add-a-column migration a 100-TB table cannot afford to do any
     other way."""
-    from de_project_sprint_etl_spark.plans import llm as _llm
     from de_project_sprint_etl_spark.sources import incremental
 
-    base = _llm._materialized(
-        spark,
-        sf_dir,
-        "orders_upsert_base",
-        lambda: t(spark, sf_dir, "orders").select(*_UPSERT_COLS),
-    )
-    root = _llm._artifact_path(sf_dir, "orders_evolution_view")
+    base = _orders_upsert_base(spark, sf_dir)
+    root = artifacts.path(sf_dir, "orders_evolution_view", ORDERS)
     incremental.init_view(
-        root, [str(_llm._artifact_path(sf_dir, "orders_upsert_base"))]
+        root, [str(artifacts.path(sf_dir, "orders_upsert_base", ORDERS))]
     )
     if not incremental.has_tag(root, "add-late-fee"):
         key = F.col("o_orderkey")

@@ -22,8 +22,8 @@ plain parquet directories):
   directory FIRST, then publishes a new manifest via write-temp +
   ``os.replace`` — atomic on POSIX. A crash between the two leaves an
   orphan directory the reader never sees: the previous generation
-  keeps being served (the round-10 ``_REFRESH_COMPLETE`` marker
-  discipline, generalized from one boolean to a generation log).
+  keeps being served (the completion-marker discipline of a parquet
+  ``_SUCCESS`` file, generalized from one boolean to a generation log).
 - Commits carry TAGS; ``has_tag`` makes refreshes idempotent (a re-run
   of an already-committed increment is a no-op, the reference's C5
   "processed correctly and not duplicated" invariant).

@@ -237,7 +237,7 @@ def test_refreshed_artifact_invalidates_on_fixture_change(spark, tmp_path):
     import os
     import shutil
 
-    from de_project_sprint_etl_spark.plans import llm
+    from de_project_sprint_etl_spark.plans import artifacts, llm
     from de_project_sprint_etl_spark.sources import incremental
 
     d = tmp_path / "corpus"
@@ -245,7 +245,7 @@ def test_refreshed_artifact_invalidates_on_fixture_change(spark, tmp_path):
     p1 = llm.refresh_minhash_pairs(spark, str(d))
     files1 = set(p1.inputFiles())
     n1 = p1.count()
-    root = llm._artifact_path(str(d), "mh_pairs_16x4_j05_refreshed")
+    root = artifacts.path(str(d), "mh_pairs_16x4_j05_refreshed", llm.DOCS)
     man = incremental.read_manifest(root)
     assert man is not None and "inc-mutants" in man["tags"]
     # in-place: the snapshot base is referenced from its own artifact
@@ -263,7 +263,7 @@ def test_refreshed_artifact_invalidates_on_fixture_change(spark, tmp_path):
     assert p2.count() == n1
     # a lost manifest (crash before the atomic publish) forces a
     # re-commit; values are unchanged (idempotent increment)
-    root2 = llm._artifact_path(str(d), "mh_pairs_16x4_j05_refreshed")
+    root2 = artifacts.path(str(d), "mh_pairs_16x4_j05_refreshed", llm.DOCS)
     (root2 / incremental.MANIFEST).unlink()
     p3 = llm.refresh_minhash_pairs(spark, str(d))
     assert incremental.has_tag(root2, "inc-mutants")
@@ -327,10 +327,10 @@ def test_curation_bench_stages_match_library_artifacts(spark, monkeypatch):
     plans/llm.py artifacts on the same corpus."""
     import importlib
 
-    from de_project_sprint_etl_spark.plans import llm
+    from de_project_sprint_etl_spark.plans import artifacts, llm
 
     cb = importlib.import_module("tools.curation_bench")
-    base = llm._artifact_path(SF, "curation_bench_test_warehouse")
+    base = artifacts.path(SF, "curation_bench_test_warehouse", llm.DOCS)
     monkeypatch.setattr(cb, "SF_DIR", SF)
     monkeypatch.setattr(cb, "BASE", str(base))
     import shutil

@@ -806,7 +806,7 @@ def test_refresh_views_commit_increment_sized_files(spark):
     dir."""
     import os
 
-    from de_project_sprint_etl_spark.plans import llm
+    from de_project_sprint_etl_spark.plans import artifacts, llm
     from de_project_sprint_etl_spark.sources import incremental
 
     view_counts = {
@@ -819,7 +819,7 @@ def test_refresh_views_commit_increment_sized_files(spark):
         ("mh_pairs_16x4_j05_refreshed", "mh_pairs_snap_16x4_j05"),
         ("mut_stats_refreshed", "doc_stats"),
     ):
-        root = llm._artifact_path(SF, name)
+        root = artifacts.path(SF, name, llm.DOCS)
         m = incremental.read_manifest(root)
         assert m is not None and "inc-mutants" in m["tags"], name
         internal = [
@@ -831,7 +831,7 @@ def test_refresh_views_commit_increment_sized_files(spark):
         assert internal and external, name
         assert all(mm["kind"] == "data" for mm in internal), name
         base_rows = spark.read.parquet(
-            str(llm._artifact_path(SF, base))
+            str(artifacts.path(SF, base, llm.DOCS))
         ).count()
         delta_rows = sum(
             spark.read.parquet(str(root / mm["path"])).count()
@@ -1032,12 +1032,12 @@ def test_minhash_refresh_soak_five_days(spark):
     from pyspark.sql import functions as F
 
     from de_project_sprint_etl_spark.functions import dedup
-    from de_project_sprint_etl_spark.plans import llm
+    from de_project_sprint_etl_spark.plans import artifacts, llm
     from de_project_sprint_etl_spark.sources import incremental
 
     for suffix in ("soaktest",):
         for name in (f"mh_sigs_{suffix}", f"mh_pairs_{suffix}"):
-            shutil.rmtree(llm._artifact_path(SF, name), ignore_errors=True)
+            shutil.rmtree(artifacts.path(SF, name, llm.DOCS), ignore_errors=True)
     sigs_root, pairs_root = llm.init_minhash_soak(spark, SF, "soaktest")
 
     def rebuilt_through(j):
@@ -1261,7 +1261,7 @@ def test_ngram_refresh_soak_five_days_with_daily_crossings(spark):
     from pyspark.sql import functions as F
 
     from de_project_sprint_etl_spark.functions import dedup
-    from de_project_sprint_etl_spark.plans import llm
+    from de_project_sprint_etl_spark.plans import artifacts, llm
     from de_project_sprint_etl_spark.sources import incremental
 
     cut = 3
@@ -1270,7 +1270,7 @@ def test_ngram_refresh_soak_five_days_with_daily_crossings(spark):
         "ngram_stream_exsoaktest",
         "ngram_census_exsoaktest",
     ):
-        shutil.rmtree(llm._artifact_path(SF, name), ignore_errors=True)
+        shutil.rmtree(artifacts.path(SF, name, llm.DOCS), ignore_errors=True)
     pairs_root, stream_root, census_root = llm.init_ngram_soak(
         spark, SF, cut, "exsoaktest"
     )

@@ -1,8 +1,8 @@
 """Round-9 extension ops: executable FFD sequence packing, the
-empirical LSH S-curve, the shingle posting-skew histogram, the PC1
-projection, and the LPA convergence early-exit — each checked against
-an independent Python reference or a structural invariant, never
-against its own oracle SQL."""
+empirical LSH S-curve, the shingle posting-skew histogram and the PC1
+projection — each checked against an independent Python reference or a
+structural invariant, never against its own oracle SQL — plus the
+derived-artifact cache integrity checks."""
 
 from __future__ import annotations
 
@@ -10,14 +10,15 @@ import sys
 from pathlib import Path
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__  # noqa: E402,F401 — populates the registry
 
-from de_project_sprint_etl_spark.functions import graph  # noqa: E402
 from de_project_sprint_etl_spark.functions.text import tokens  # noqa: E402
+from de_project_sprint_etl_spark.plans import llm, testdata, warehouse  # noqa: E402
 from de_project_sprint_etl_spark.plans.mlops import (  # noqa: E402
     PACK_FFD_BUDGET,
     PACK_FFD_CHUNK,
@@ -189,38 +190,7 @@ def test_pca_model_is_memoized(spark):
     assert _pca_model(spark, SF) is _pca_model(spark, SF)
 
 
-# --- LPA convergence early-exit ------------------------------------------------
-
-
-def _clique_edges(spark, groups):
-    rows = [
-        (a, b)
-        for g in groups
-        for a in g
-        for b in g
-        if a != b
-    ]
-    return spark.createDataFrame(rows, "src long, dst long")
-
-
-def test_lpa_early_exit_is_bit_identical_and_converges(spark):
-    edges = _clique_edges(spark, [range(1, 6), range(10, 17)])
-    full = {
-        (r["node"], r["community"])
-        for r in graph.label_propagation(edges, rounds=6).collect()
-    }
-    fast = {
-        (r["node"], r["community"])
-        for r in graph.label_propagation(
-            edges, rounds=6, early_exit=True
-        ).collect()
-    }
-    assert full == fast
-    # two cliques: every member adopts the clique's min id
-    assert {c for _, c in fast} == {1, 10}
-
-
-# --- pair-artifact cache integrity ----------------------------------------------
+# --- derived-artifact cache integrity -------------------------------------------
 
 
 def test_pair_artifacts_match_live_pipelines(spark):
@@ -253,24 +223,38 @@ def test_pair_artifacts_match_live_pipelines(spark):
     assert live_mh == art_mh
 
 
-def test_pair_artifact_invalidates_on_fixture_change(spark, tmp_path):
-    """A regenerated corpus must never serve a stale pair artifact:
-    the cache key folds in the documents fixture's (mtime_ns, size), so
-    rewriting the file — even with identical bytes — points the
-    accessor at a fresh build."""
+@pytest.mark.parametrize(
+    "fixture, accessor",
+    [
+        ("documents", llm.ngram_pairs),
+        ("lineitem", testdata.order_log_v2_cached),
+        ("events", testdata.weeks_dim_cached),
+        ("orders", warehouse._orders_upsert_base),
+    ],
+    ids=[
+        "documents-ngram_pairs",
+        "lineitem-order_log",
+        "events-weeks",
+        "orders-upsert_base",
+    ],
+)
+def test_artifact_invalidates_on_fixture_change(spark, tmp_path, fixture, accessor):
+    """A regenerated fixture must never serve a stale derived artifact:
+    the artifact key folds in the fingerprint of every table its build
+    reads, so rewriting any one of them — even with identical bytes —
+    points the accessor at a fresh build."""
     import os
     import shutil
 
-    from de_project_sprint_etl_spark.plans import llm
-
     d = tmp_path / "corpus"
     shutil.copytree("/root/testdata/sf0.001", d)
-    p1 = llm.ngram_pairs(spark, str(d))
+    p1 = accessor(spark, str(d))
+    assert accessor(spark, str(d)) is p1  # one scan object per session
     files1 = set(p1.inputFiles())
     n1 = p1.count()
-    doc = d / "documents.parquet"
-    os.utime(doc, ns=(os.stat(doc).st_atime_ns, os.stat(doc).st_mtime_ns + 7))
-    p2 = llm.ngram_pairs(spark, str(d))
+    src = d / f"{fixture}.parquet"
+    os.utime(src, ns=(os.stat(src).st_atime_ns, os.stat(src).st_mtime_ns + 7))
+    p2 = accessor(spark, str(d))
     files2 = set(p2.inputFiles())
-    assert files1 != files2, "stale artifact served after fixture rewrite"
+    assert files1 != files2, f"stale artifact served after {fixture} rewrite"
     assert p2.count() == n1

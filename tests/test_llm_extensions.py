@@ -32,11 +32,30 @@ def test_dup_groups_converges_on_cycle(spark):
     assert all(r.group_size == 3 for r in rows)
 
 
-def test_dup_groups_star_matches_label_prop_on_skewed_graph(spark):
-    """Large-star/small-star must return row-for-row the same groups as
-    label propagation on a skewed graph: a 60-node chain (diameter
-    stresses label_prop), a 40-leaf hub (the mega-component shape star
-    exists for), a clique, and singleton pairs."""
+def _union_find_groups(edges):
+    """Expected dup groups from a plain union-find: every vertex maps to
+    (min id of its component, component size)."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    members: dict[int, list[int]] = {}
+    for v in parent:
+        members.setdefault(find(v), []).append(v)
+    return {v: (root, len(vs)) for root, vs in members.items() for v in vs}
+
+
+def test_dup_groups_matches_union_find_on_skewed_graph(spark):
+    """Label propagation must return exactly the union-find partition on
+    a skewed graph: a 60-node chain (its diameter needs ~60 rounds), a
+    40-leaf hub, a clique, and singleton pairs."""
     edges = (
         [(i, i + 1) for i in range(100, 160)]             # chain
         + [(500, 500 + i) for i in range(1, 41)]          # hub-and-spokes
@@ -44,14 +63,11 @@ def test_dup_groups_star_matches_label_prop_on_skewed_graph(spark):
         + [(7000, 7001), (8000, 8001)]                    # tiny pairs
     )
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    # label_prop needs O(diameter) rounds for the 60-node chain; star
-    # converges in O(log n) with the default budget
-    a = sorted(tuple(r) for r in dedup.dup_groups(pairs, max_iter=80).collect())
-    b = sorted(
-        tuple(r)
-        for r in dedup.dup_groups(pairs, algorithm="star", max_iter=15).collect()
-    )
-    assert a == b
+    got = {
+        r.id: (r.group_id, r.group_size)
+        for r in dedup.dup_groups(pairs, max_iter=80).collect()
+    }
+    assert got == _union_find_groups(edges)
 
 
 def test_dup_groups_raises_when_round_budget_too_small(spark):

@@ -825,14 +825,32 @@ def test_round8_tuning_ops_prune_their_scans(spark):
     assert "doc_id" not in plan  # pruned
 
 
+def _reference_lpa(edges, rounds):
+    """Synchronous LPA in plain Python: each round a node adopts its
+    neighbors' most frequent label, ties to the smaller label."""
+    from collections import Counter
+
+    adj: dict[int, list[int]] = {}
+    for src, dst in edges:
+        adj.setdefault(src, []).append(dst)
+    lbl = {v: v for v in adj}
+    for _ in range(rounds):
+        lbl = {
+            v: max(
+                Counter(lbl[u] for u in nbrs).items(),
+                key=lambda kv: (kv[1], -kv[0]),
+            )[0]
+            for v, nbrs in adj.items()
+        }
+    return lbl
+
+
 def test_label_propagation_matches_reference_lpa(spark):
     """3-round synchronous LPA recomputed independently in Python
     (most-frequent neighbor label, ties to the smaller label) must equal
     the engine output node-for-node, and must find more than one
     community (frequency voting yields sub-component structure where
     min-id contraction would collapse to components)."""
-    from collections import Counter
-
     import __spark_entry__ as em
     from de_project_sprint_etl_spark.functions import graph
     from de_project_sprint_etl_spark.plans.testdata import t as t_
@@ -842,21 +860,30 @@ def test_label_propagation_matches_reference_lpa(spark):
         r.node: r.community
         for r in em.queries()["label_propagation_communities"](spark, sf).collect()
     }
-    edges = graph.copurchase_edges(t_(spark, sf, "lineitem")).collect()
-    adj: dict[int, list[int]] = {}
-    for e in edges:
-        adj.setdefault(e.src, []).append(e.dst)
-    lbl = {v: v for v in adj}
-    for _ in range(3):
-        nxt = {}
-        for v, nbrs in adj.items():
-            c = Counter(lbl[u] for u in nbrs)
-            best = max(c.items(), key=lambda kv: (kv[1], -kv[0]))[0]
-            nxt[v] = best
-        lbl = nxt
+    edges = [
+        (e.src, e.dst)
+        for e in graph.copurchase_edges(t_(spark, sf, "lineitem")).collect()
+    ]
+    lbl = _reference_lpa(edges, 3)
     assert got == lbl
     # every community label is a real seed node (labels only ever copy
     # existing ids). Sub-component structure is corpus-dependent: the
     # tiny sf0.001 graph collapses to one label in 3 rounds; sf0.01
     # yields 3 communities over 2000 nodes (checked while landing).
-    assert set(got.values()) <= set(adj)
+    assert set(got.values()) <= set(lbl)
+    # two disjoint cliques: every member adopts its clique's min id
+    cliques = [
+        (a, b)
+        for g in (range(1, 6), range(10, 17))
+        for a in g
+        for b in g
+        if a != b
+    ]
+    got = {
+        r.node: r.community
+        for r in graph.label_propagation(
+            spark.createDataFrame(cliques, "src long, dst long"), rounds=6
+        ).collect()
+    }
+    assert got == _reference_lpa(cliques, 6)
+    assert set(got.values()) == {1, 10}

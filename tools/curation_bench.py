@@ -200,7 +200,7 @@ def main() -> None:
         out["fixed_point"] = "ok"
         out["rerun_sec"] = round(rerun, 2)
     if "--incremental" in sys.argv:
-        from de_project_sprint_etl_spark.plans import llm
+        from de_project_sprint_etl_spark.plans import artifacts, llm
 
         # prebuild "yesterday's" state (snapshot artifacts + the shared
         # fixture-corpus stages) OUTSIDE the timed section, then clear
@@ -210,17 +210,17 @@ def main() -> None:
         llm.minhash_pairs_snapshot(spark, SF_DIR)
         llm.dup_groups_snapshot(spark, SF_DIR)
         llm.doc_stats(spark, SF_DIR)
+        # the session's memoized scans are keyed on each artifact's
+        # commit marker (groups) or manifest commit id (views), so the
+        # rebuilt artifacts are re-listed, never served from a dead scan
         for name in (
             "mh_pairs_16x4_j05_refreshed",
             "mut_stats_refreshed",
             "mh_groups_refreshed",
         ):
-            p = llm._artifact_path(SF_DIR, name)
-            shutil.rmtree(p, ignore_errors=True)
-            # path-keyed entry covers the copy-based groups artifact;
-            # the manifest views key by commit id, and the fresh
-            # commit's new cid forces its own cache miss
-            llm._READ_CACHE.pop((id(spark), str(p)), None)
+            shutil.rmtree(
+                artifacts.path(SF_DIR, name, llm.DOCS), ignore_errors=True
+            )
         t0 = time.time()
         n_pairs = llm.refresh_minhash_pairs(spark, SF_DIR).count()
         n_stats = llm.refresh_mutant_stats(spark, SF_DIR).count()
@@ -232,11 +232,11 @@ def main() -> None:
             "groups": n_groups,
         }
     if "--soak" in sys.argv:
-        from de_project_sprint_etl_spark.plans import llm
+        from de_project_sprint_etl_spark.plans import artifacts, llm
         from de_project_sprint_etl_spark.sources import incremental
 
         for name in ("mh_sigs_benchsoak", "mh_pairs_benchsoak"):
-            shutil.rmtree(llm._artifact_path(SF_DIR, name), ignore_errors=True)
+            shutil.rmtree(artifacts.path(SF_DIR, name, llm.DOCS), ignore_errors=True)
         sigs_root, pairs_root = llm.init_minhash_soak(
             spark, SF_DIR, "benchsoak"
         )
@@ -256,7 +256,7 @@ def main() -> None:
             "ngram_stream_benchsoak",
             "ngram_census_benchsoak",
         ):
-            shutil.rmtree(llm._artifact_path(SF_DIR, name), ignore_errors=True)
+            shutil.rmtree(artifacts.path(SF_DIR, name, llm.DOCS), ignore_errors=True)
         ex_pairs, ex_stream, ex_census = llm.init_ngram_soak(
             spark, SF_DIR, cut, "benchsoak"
         )

@@ -40,22 +40,21 @@ if GRAPH_MODE:
     sys.argv.remove("--graph")
 
 
+#: every base table the replica dir is built from (replicated or copied)
+SOURCE_TABLES = (
+    "documents", "embeddings", "events", "orders", "lineitem",
+    "region", "nation", "customer", "supplier", "part",
+)
+
+
 def _scale_dir() -> str:
-    """Cache dir keyed on the base path and the source fixtures'
-    (mtime_ns, size) — same contract as plans/llm._materialized — so a
-    regenerated or re-pointed base corpus never reuses stale replicas."""
-    sig = "_".join(
-        f"{os.stat(os.path.join(BASE, t + '.parquet')).st_mtime_ns}-"
-        f"{os.stat(os.path.join(BASE, t + '.parquet')).st_size}"
-        for t in ("documents", "embeddings", "events")
-    )
-    key = BASE.strip("/").replace("/", "_")
-    tag = "graph-" if GRAPH_MODE else ""
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".cache",
-        f"scale{REPLICAS}x-{tag}{key}-{sig}",
-    )
+    """Replica dir as a plans/artifacts directory over every base table
+    it is built from, so a regenerated or re-pointed base corpus never
+    reuses stale replicas."""
+    from de_project_sprint_etl_spark.plans import artifacts
+
+    tag = "-graph" if GRAPH_MODE else ""
+    return str(artifacts.path(BASE, f"scale{REPLICAS}x{tag}", SOURCE_TABLES))
 
 
 SCALE_DIR = _scale_dir()

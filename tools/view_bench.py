@@ -35,22 +35,17 @@ ROOT = os.path.join(REPO, ".cache", "view-bench-root")
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from de_project_sprint_etl_spark.plans import llm, warehouse
+    from de_project_sprint_etl_spark.plans import artifacts, warehouse
     from de_project_sprint_etl_spark.session import get_spark
     from de_project_sprint_etl_spark.sources import incremental
 
     spark = get_spark()
-    base = llm._materialized(
-        spark,
-        SF_DIR,
-        "orders_upsert_base",
-        lambda: warehouse.t(spark, SF_DIR, "orders").select(
-            *warehouse._UPSERT_COLS
-        ),
-    )
+    base = warehouse._orders_upsert_base(spark, SF_DIR)
     n_base = base.count()  # warm the scan before timing
     shutil.rmtree(ROOT, ignore_errors=True)
-    base_path = str(llm._artifact_path(SF_DIR, "orders_upsert_base"))
+    base_path = str(
+        artifacts.path(SF_DIR, "orders_upsert_base", warehouse.ORDERS)
+    )
     key = F.col("o_orderkey")
     rows: list[tuple[str, float, str]] = []
 
