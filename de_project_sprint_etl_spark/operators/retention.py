@@ -20,9 +20,17 @@ Scale design:
   bucket's [start, end].
 - cohorts are two chained hash aggregations (partial map-side combine on
   both levels); the only wide exchanges are the two groupBys.
+- the daily pipeline builds both marts from one classification frame
+  (``retention_marts``): one aggregate at (status, customer, date, period,
+  item) grain, then one conditional aggregate per mart instead of six
+  cohort branches and four full joins. The per-cohort operators below
+  are the reference form; the registered cohort queries run on them.
 """
 
 from __future__ import annotations
+
+import contextlib
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -120,9 +128,11 @@ def cohort_base(
 
     The status filter runs before the join so predicate pushdown reaches
     the scan (F1/F2). The new and returned cohorts share the identical
-    ``status='shipped'`` base — compute it once, ``persist()``, and pass
-    it to both via their ``base=`` parameter (the retention assembly
-    plans do this); that halves the fact-table scans in the mart build.
+    ``status='shipped'`` base; the retention assembly plans compute it
+    once, ``persist()`` it and pass it to both via their ``base=``
+    parameter. That saves a fact-table scan but measured no faster in
+    the mart build (ROADMAP D): the cost is the job and exchange count,
+    not the scans.
     """
     filtered = v2.filter(F.col("status") == status)
     with_period = assign_week_period(filtered, weeks, "date_time", how=how)
@@ -226,6 +236,12 @@ def assemble_retention_mart(
         .join(ref, on="period", how="full")
         .orderBy("period")
     )
+    return _mart_columns(joined)
+
+
+def _mart_columns(joined: DataFrame) -> DataFrame:
+    """Project the period-joined item cohorts into the
+    ``creating_retention.sql`` DDL's column names and types."""
     return joined.select(
         F.col("new_cust_count").cast("int").alias("new_customers_count"),
         F.col("returned_cust_count").cast("int").alias("returning_customers_count"),
@@ -241,3 +257,101 @@ def assemble_retention_mart(
         F.round(F.col("returned_revenue")).cast("long").alias("returning_customers_revenue"),
         F.col("total_refunds").cast("int").alias("customers_refunded"),
     )
+
+
+def _cohort_aggregate(df: DataFrame, keys: list[str]) -> DataFrame:
+    """The three cohorts of ``new_customers`` / ``returned_customers`` /
+    ``refunded_customers`` as one conditional aggregate per ``keys`` over
+    a (status, customer_id, period, cnt, revenue) frame, with their
+    column names and types. A cohort absent from a group gives NULL, not
+    0, as the reference's FULL JOIN does.
+
+    A FULL JOIN never matches NULL keys, so each cohort's NULL-period
+    rows stay rows of their own there; grouping NULL periods by cohort
+    (``__unmatched``) keeps them apart here too."""
+    shipped = F.col("status") == "shipped"
+    new = shipped & (F.col("cnt") == 1)
+    ret = shipped & (F.col("cnt") > 1)
+    ref = F.col("status") == "refunded"
+    cohort = F.when(ref, "ref").when(new, "new").otherwise("ret")
+
+    def if_present(member, agg):
+        return F.when(F.count(F.when(member, 1)) > 0, agg)
+
+    unmatched = F.when(F.col("period").isNull(), cohort).alias("__unmatched")
+    return df.groupBy(*keys, unmatched).agg(
+        if_present(new, F.count(F.when(new, F.col("customer_id")))).alias("new_cust_count"),
+        F.sum(F.when(new, F.col("revenue"))).alias("new_cust_revenue"),
+        if_present(ret, F.count(F.when(ret, F.col("customer_id")))).alias("returned_cust_count"),
+        F.sum(F.when(ret, F.col("revenue"))).alias("returned_revenue"),
+        if_present(ref, F.count(F.when(ref, 1))).alias("cust_with_refunds"),
+        F.sum(F.when(ref, F.col("cnt"))).alias("total_refunds"),
+    )
+
+
+@contextlib.contextmanager
+def retention_marts(
+    v2: DataFrame, weeks: DataFrame
+) -> Iterator[tuple[DataFrame, DataFrame]]:
+    """``(retention_compact, f_customer_retention)`` from one persisted
+    classification frame, released when the block exits::
+
+        with retention_marts(v2, weeks) as (compact, mart):
+            ...write both...
+
+    Equal in schema and rows to ``assemble_retention_compact`` and
+    ``assemble_retention_mart`` over the per-cohort operators. The frame
+    is ``cohort_base`` for both statuses at item grain: shipped and
+    refunded rows, one ``assign_week_period``, one aggregate per
+    (status, customer, date, period, item).
+
+    - compact: cnt and revenue are additive over items, so the frame
+      re-aggregated to customer grain is the customer-grain cohort base;
+      then one conditional aggregate per period.
+    - mart: one conditional aggregate per (period, item), each cohort
+      collected per period and exploded (``explode_outer``, so an absent
+      cohort is one NULL row). That is the reference's item
+      cross-combination of FULL JOIN USING(period): max(n,1) * max(r,1)
+      * max(f,1) rows for a period with n new, r returning and f
+      refunded items.
+    """
+    frame = (
+        assign_week_period(
+            v2.filter(F.col("status").isin("shipped", "refunded")), weeks
+        )
+        .groupBy("status", "customer_id", "date_time", "period", "item_id")
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum("payment_amount").alias("revenue"),
+        )
+        .persist()
+    )
+    try:
+        customers = frame.groupBy("status", "customer_id", "date_time", "period").agg(
+            F.sum("cnt").alias("cnt"), F.sum("revenue").alias("revenue")
+        )
+        compact = (
+            _cohort_aggregate(customers, ["period"])
+            .drop("__unmatched")
+            .orderBy("period")
+        )
+
+        def items_of(count: str, item: str, total: str):
+            entry = F.struct(F.col("item_id").alias(item), count, total)
+            return F.collect_list(F.when(F.col(count).isNotNull(), entry))
+
+        per_period = _cohort_aggregate(frame, ["period", "item_id"]).groupBy(
+            "period", "__unmatched"
+        ).agg(
+            items_of("new_cust_count", "item_new", "new_cust_revenue").alias("new"),
+            items_of("returned_cust_count", "item_ret", "returned_revenue").alias("ret"),
+            items_of("cust_with_refunds", "item_ref", "total_refunds").alias("ref"),
+        )
+        for c in ("new", "ret", "ref"):
+            per_period = per_period.withColumn(c, F.explode_outer(c))
+        mart = _mart_columns(
+            per_period.select("period", "new.*", "ret.*", "ref.*").orderBy("period")
+        )
+        yield compact, mart
+    finally:
+        frame.unpersist()

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import shutil
 import sys
 from pathlib import Path
 
@@ -44,3 +45,18 @@ from de_project_sprint_etl_spark.session import get_spark  # noqa: E402
 def spark():
     spark = get_spark(app_name="tests", shuffle_partitions=4)
     yield spark
+
+
+@pytest.fixture(scope="session", autouse=True)
+def _drop_tmp_artifacts(tmp_path_factory):
+    """Derived artifacts of fixtures copied into this session's pytest
+    tmp dirs live under ``.cache/derived/<key>-<digest>``, keyed as
+    ``artifacts.path`` keys them; remove them at session end so the
+    shared cache does not grow with every run. Artifacts of the real
+    fixture dirs are keyed outside the basetemp and stay."""
+    yield
+    from de_project_sprint_etl_spark.plans import artifacts
+
+    key = str(tmp_path_factory.getbasetemp()).strip("/").replace("/", "_")
+    for d in artifacts.ROOT.glob(f"{key}_*"):
+        shutil.rmtree(d, ignore_errors=True)

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from de_project_sprint_etl_spark.operators import dims, facts, retention
@@ -203,6 +204,91 @@ def test_retention_compact_nulls_for_missing_weeks(spark):
     assert by_period[2].new_cust_count is None  # week 2 had only refunds
     assert by_period[2].cust_with_refunds == 1
     assert by_period[3].returned_cust_count is None
+
+
+# A date no week covers: rows on it get a NULL period.
+OFF_CALENDAR = D(2023, 3, 6)
+
+
+@pytest.mark.parametrize(
+    "extra",
+    [
+        pytest.param([], id="fixture"),
+        # c7 ships two different items once each on one day: new at item
+        # grain, returning at customer grain (the additive re-aggregation);
+        # with c8's repeat and c3's refund, week 2 cross-combines 2x1x1
+        pytest.param(
+            [
+                (7, D(2023, 1, 10), 20, 10.50, "shipped"),
+                (7, D(2023, 1, 10), 21, 20.25, "shipped"),
+                (8, D(2023, 1, 11), 22, 5.50, "shipped"),
+                (8, D(2023, 1, 11), 22, 5.50, "shipped"),
+            ],
+            id="two_items_one_day",
+        ),
+        pytest.param(
+            [
+                (5, D(2023, 1, 23), 13, 40.0, "refunded"),
+                (6, D(2023, 1, 24), 14, 60.0, "refunded"),
+                (6, D(2023, 1, 24), 14, 60.0, "refunded"),
+            ],
+            id="refund_only_period",
+        ),
+        pytest.param(
+            [
+                (9, D(2023, 1, 17), 10, 12.0, "shipped"),
+                (9, D(2023, 1, 17), 10, 12.0, "refunded"),
+            ],
+            id="shipped_and_refunded_same_day",
+        ),
+        # count(customer_id) skips the NULL id; count(*) of refunds does not
+        pytest.param(
+            [
+                (None, D(2023, 1, 4), 10, 40.0, "shipped"),
+                (None, D(2023, 1, 4), 11, 10.0, "refunded"),
+                (None, D(2023, 1, 18), 30, 5.0, "shipped"),
+            ],
+            id="null_customer_id",
+        ),
+        # a FULL JOIN never matches NULL periods: one row per cohort
+        pytest.param(
+            [
+                (10, OFF_CALENDAR, 40, 9.0, "shipped"),
+                (11, OFF_CALENDAR, 41, 9.0, "shipped"),
+                (11, OFF_CALENDAR, 41, 9.0, "shipped"),
+                (12, OFF_CALENDAR, 42, 9.0, "refunded"),
+            ],
+            id="null_period",
+        ),
+    ],
+)
+def test_retention_marts_equal_per_cohort_composition(spark, extra):
+    """The one-frame operator the pipeline writes both marts with equals
+    the reference composition (three cohorts per grain, chained FULL
+    JOINs USING(period)) in schema and rows. Amounts are decimal, as in
+    the pipeline's merged log, so revenue sums are exact."""
+    base = order_log(spark)
+    log = base.unionByName(spark.createDataFrame(extra, base.schema)).withColumn(
+        "payment_amount", F.col("payment_amount").cast("decimal(18,2)")
+    )
+    dates = log.select(F.col("date_time").alias("fact_date")).distinct()
+    weeks = retention.build_weeks(dates.filter(F.col("fact_date") != OFF_CALENDAR))
+
+    def cohorts(item):
+        return (
+            retention.new_customers(log, weeks, item=item),
+            retention.returned_customers(log, weeks, item=item),
+            retention.refunded_customers(log, weeks, item=item),
+        )
+
+    want = (
+        retention.assemble_retention_compact(*cohorts(False)),
+        retention.assemble_retention_mart(*cohorts(True)),
+    )
+    with retention.retention_marts(log, weeks) as got:
+        for g, w in zip(got, want):
+            assert g.schema == w.schema
+            assert sorted(g.collect(), key=repr) == sorted(w.collect(), key=repr)
 
 
 def test_merge_snapshot_increment_idempotent_and_no_dupes(spark):

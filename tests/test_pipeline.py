@@ -11,7 +11,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from de_project_sprint_etl_spark import pipeline
+from de_project_sprint_etl_spark import pipeline, schemas
 
 ORDER_COLS = [
     "id", "uniq_id", "date_time", "city_id", "city_name", "customer_id",
@@ -93,6 +93,34 @@ def test_full_pipeline(spark, src_dir, tmp_path):
 
     mart = spark.read.parquet(f"{base}/mart/f_customer_retention")
     assert mart.filter(F.col("period_name") != "weekly").count() == 0
+    # one row per period: each period has at most one item per cohort, so
+    # the item cross-combination is 1x1x1; absent cohorts are NULL and
+    # revenues are rounded bigints
+    assert sorted(map(tuple, mart.collect()), key=repr) == sorted(
+        [
+            (1, 1, None, "weekly", 1, 10, 11, None, 100, 100, None),
+            (1, None, None, "weekly", 2, 12, None, None, 80, None, None),
+            (1, None, 1, "weekly", 3, 12, None, 10, 60, None, 1),
+        ],
+        key=repr,
+    )
+
+    # written parquet matches its declared schema (nullability aside);
+    # the pipeline reads staging and d_calendar back with theirs, so a
+    # drift must fail here rather than mis-read silently
+    for table, declared in [
+        ("staging/user_order_log", schemas.USER_ORDER_LOG),
+        ("staging/user_order_log_inc", schemas.USER_ORDER_LOG_INC),
+        ("staging/user_activity_log", schemas.USER_ACTIVITY_LOG),
+        ("staging/customer_research", schemas.CUSTOMER_RESEARCH),
+        ("mart/d_calendar", schemas.D_CALENDAR),
+        ("mart/d_calendar_weeks", schemas.D_CALENDAR_WEEKS),
+        ("mart/f_customer_retention", schemas.F_CUSTOMER_RETENTION),
+    ]:
+        inferred = spark.read.parquet(f"{base}/{table}").schema
+        assert [(f.name, f.dataType) for f in inferred] == [
+            (f.name, f.dataType) for f in declared
+        ], table
 
 
 def test_pipeline_rerun_is_fixed_point(spark, src_dir, tmp_path):
