@@ -18,21 +18,22 @@ Scale design:
   both are equivalent because week buckets are min/max of observed dates
   within a week-trunc bucket, so every in-calendar date lands in its own
   bucket's [start, end].
-- cohorts are two chained hash aggregations (partial map-side combine on
-  both levels); the only wide exchanges are the two groupBys.
-- the daily pipeline builds both marts from one classification frame
-  (``retention_marts``): one aggregate at (status, customer, date, period,
-  item) grain, then one conditional aggregate per mart instead of six
-  cohort branches and four full joins. The per-cohort operators below
-  are the reference form; the registered cohort queries run on them.
+- each cohort is defined once, in ``COHORTS``. ``cohort_base`` is the
+  one classification frame: a status filter (pushed into the scan), the
+  week join and one aggregate per (status, customer, date, period[,
+  item]). ``cohort`` filters it to one cohort and aggregates per period;
+  ``retention_compact`` and ``retention_mart`` read all three cohorts in
+  one conditional aggregate instead of three cohort branches and the
+  reference's FULL JOINs.
 """
 
 from __future__ import annotations
 
 import contextlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -115,133 +116,157 @@ def assign_week_period(
     raise ValueError(f"unknown week-assignment strategy: {how}")
 
 
+class Cohort(NamedTuple):
+    """One cohort of the reference's cohort queries."""
+
+    status: str
+    #: which base groups belong, given their row count; None: every group
+    member: Callable[[Column], Column] | None
+    #: the column the count reads; None counts groups
+    counted: str | None
+    #: the base measure the total sums
+    summed: str
+    #: output names of the count, the total and the item
+    columns: tuple[str, str, str]
+
+
+_SHIPPED = "shipped"
+
+#: The reference's cohorts (``new_customers.sql``,
+#: ``returned_customers.sql``, ``refunded_customers.sql``) over the
+#: per-(customer, date[, item]) rows of ``cohort_base``: a shipped group
+#: seen once is new, seen more often returning; every refunded group
+#: counts, with its refund events as the total.
+COHORTS = {
+    "new": Cohort(
+        _SHIPPED, lambda cnt: cnt == 1, "customer_id", "revenue",
+        ("new_cust_count", "new_cust_revenue", "item_new"),
+    ),
+    "ret": Cohort(
+        _SHIPPED, lambda cnt: cnt > 1, "customer_id", "revenue",
+        ("returned_cust_count", "returned_revenue", "item_ret"),
+    ),
+    "ref": Cohort(
+        "refunded", None, None, "cnt",
+        ("cust_with_refunds", "total_refunds", "item_ref"),
+    ),
+}
+
+#: every status a cohort reads, in ``COHORTS`` order
+STATUSES = tuple(dict.fromkeys(c.status for c in COHORTS.values()))
+
+
 def cohort_base(
-    v2: DataFrame,
-    weeks: DataFrame,
-    status: str,
-    item: bool,
-    how: str = "equi",
+    v2: DataFrame, weeks: DataFrame, statuses: tuple[str, ...], item: bool
 ) -> DataFrame:
-    """Inner CTE shared by all three cohorts (reference
-    ``new_customers.sql:3-7`` shape): filter by status, attach the week
-    period, aggregate per (customer, date, period[, item]).
+    """The inner CTE of the cohort queries (reference
+    ``new_customers.sql:3-7`` shape): rows of ``statuses``, their week
+    period, and per (status, customer, date, period[, item]) the row
+    count ``cnt`` and ``revenue``.
 
     The status filter runs before the join so predicate pushdown reaches
-    the scan (F1/F2). The new and returned cohorts share the identical
-    ``status='shipped'`` base; the retention assembly plans compute it
-    once, ``persist()`` it and pass it to both via their ``base=``
-    parameter. That saves a fact-table scan but measured no faster in
-    the mart build (ROADMAP D): the cost is the job and exchange count,
-    not the scans.
-    """
-    filtered = v2.filter(F.col("status") == status)
-    with_period = assign_week_period(filtered, weeks, "date_time", how=how)
-    keys = ["customer_id", "date_time", "period"] + (["item_id"] if item else [])
-    return with_period.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("payment_amount").alias("revenue"),
-    )
-
-
-def new_customers(
-    v2: DataFrame | None = None,
-    weeks: DataFrame | None = None,
-    item: bool = True,
-    base: DataFrame | None = None,
-) -> DataFrame:
-    """``mart.new_cust`` / ``new_cust_compact`` (reference
-    ``new_customers.sql``): shipped rows, HAVING count(*)=1 per
-    (customer, date, period[, item]) — a customer whose (date[, item])
-    appears exactly once is "new" — then re-aggregate per period[, item].
-    """
-    if base is None:
-        base = cohort_base(v2, weeks, "shipped", item)
-    base = base.filter(F.col("cnt") == 1)
-    keys = ["period"] + (["item_id"] if item else [])
-    out = base.groupBy(*keys).agg(
-        F.count("customer_id").alias("new_cust_count"),
-        F.sum("revenue").alias("new_cust_revenue"),
-    )
-    if item:
-        out = out.withColumnRenamed("item_id", "item_new")
-    return out
-
-
-def returned_customers(
-    v2: DataFrame | None = None,
-    weeks: DataFrame | None = None,
-    item: bool = True,
-    base: DataFrame | None = None,
-) -> DataFrame:
-    """``mart.returned_cust`` (reference ``returned_customers.sql``):
-    same shape as new_customers but HAVING count(*) > 1 (repeat rows in
-    the same (date[, item]) bucket ⇒ returning)."""
-    if base is None:
-        base = cohort_base(v2, weeks, "shipped", item)
-    base = base.filter(F.col("cnt") > 1)
-    keys = ["period"] + (["item_id"] if item else [])
-    out = base.groupBy(*keys).agg(
-        F.count("customer_id").alias("returned_cust_count"),
-        F.sum("revenue").alias("returned_revenue"),
-    )
-    if item:
-        out = out.withColumnRenamed("item_id", "item_ret")
-    return out
-
-
-def refunded_customers(
-    v2: DataFrame, weeks: DataFrame, item: bool = True
-) -> DataFrame:
-    """``mart.refunded_cust`` (reference ``refunded_customers.sql``):
-    refunded rows, count(*) AS refunds per (customer, date, period[,
-    item]) (no HAVING), then per period[, item]: count(*) customers with
-    refunds + sum(refunds) total refund events."""
-    base = cohort_base(v2, weeks, "refunded", item)
-    keys = ["period"] + (["item_id"] if item else [])
-    out = base.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("cust_with_refunds"),
-        F.sum("cnt").alias("total_refunds"),
-    )
-    if item:
-        out = out.withColumnRenamed("item_id", "item_ref")
-    return out
-
-
-def assemble_retention_compact(
-    new_c: DataFrame, ret_c: DataFrame, ref_c: DataFrame
-) -> DataFrame:
-    """``mart.retention_compact`` (reference
-    ``loading_retention_mart.sql:2-3``): two chained FULL JOINs
-    USING(period) — PySpark's ``on="period"`` reproduces the USING key
-    coalescing — ordered by period. Weeks present in one cohort but not
-    another yield NULL columns (reference comments.md:8)."""
+    the scan (F1/F2)."""
+    filtered = v2.filter(F.col("status").isin(*statuses))
+    keys = ["status", "customer_id", "date_time", "period"]
     return (
-        new_c.join(ret_c, on="period", how="full")
-        .join(ref_c, on="period", how="full")
+        assign_week_period(filtered, weeks)
+        .groupBy(*keys, *(["item_id"] if item else []))
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum("payment_amount").alias("revenue"),
+        )
+    )
+
+
+def _member(name: str) -> Column:
+    c = COHORTS[name]
+    status = F.col("status") == c.status
+    return status if c.member is None else status & c.member(F.col("cnt"))
+
+
+def _counted(c: Cohort) -> Column:
+    return F.lit(1) if c.counted is None else F.col(c.counted)
+
+
+def cohort(base: DataFrame, name: str, keys: list[str]) -> DataFrame:
+    """One cohort of ``COHORTS`` per ``keys`` over a ``cohort_base``
+    frame (reference ``mart.new_cust`` / ``returned_cust`` /
+    ``refunded_cust`` and their ``_compact`` forms): the cohort's groups,
+    then its count and total; ``item_id`` is renamed to the cohort's
+    item column."""
+    c = COHORTS[name]
+    count, total, item = c.columns
+    out = base.filter(_member(name)).groupBy(*keys).agg(
+        F.count(_counted(c)).alias(count), F.sum(c.summed).alias(total)
+    )
+    return out.withColumnRenamed("item_id", item)
+
+
+def _cohort_aggregate(df: DataFrame, keys: list[str]) -> DataFrame:
+    """Every cohort of ``COHORTS`` as one conditional aggregate per
+    ``keys`` over a ``cohort_base`` frame, with ``cohort``'s column names
+    and types. A cohort absent from a group gives NULL, not 0, as the
+    reference's FULL JOIN does.
+
+    A FULL JOIN never matches NULL keys, so each cohort's NULL-period
+    rows stay rows of their own there; grouping NULL periods by cohort
+    (``__unmatched``) keeps them apart here too."""
+    member = {name: _member(name) for name in COHORTS}
+    label = F.coalesce(*[F.when(m, name) for name, m in member.items()])
+    unmatched = F.when(F.col("period").isNull(), label).alias("__unmatched")
+    measures = []
+    for name, m in member.items():
+        c = COHORTS[name]
+        count, total, _ = c.columns
+        measures += [
+            F.when(
+                F.count(F.when(m, 1)) > 0, F.count(F.when(m, _counted(c)))
+            ).alias(count),
+            F.sum(F.when(m, F.col(c.summed))).alias(total),
+        ]
+    return df.groupBy(*keys, unmatched).agg(*measures)
+
+
+def retention_compact(customers: DataFrame) -> DataFrame:
+    """``mart.retention_compact`` (reference
+    ``loading_retention_mart.sql:2-3``) from a customer-grain
+    ``cohort_base`` of ``STATUSES``: the three cohorts per period, NULL
+    where a week lacks a cohort (reference comments.md:8), ordered by
+    period."""
+    return (
+        _cohort_aggregate(customers, ["period"])
+        .drop("__unmatched")
         .orderBy("period")
     )
 
 
-def assemble_retention_mart(
-    new: DataFrame, ret: DataFrame, ref: DataFrame
-) -> DataFrame:
+def retention_mart(items: DataFrame) -> DataFrame:
     """``mart.f_customer_retention`` (reference
     ``loading_retention_mart.sql:5-8`` into the ``creating_retention.sql``
-    DDL): item-level cohorts full-joined USING(period) — note the
-    reference joins on period alone, so items cross-combine within a
-    period; we reproduce that faithfully — projected into the DDL's
-    column names/types (counts int4, revenues bigint)."""
-    joined = (
-        new.join(ret, on="period", how="full")
-        .join(ref, on="period", how="full")
-        .orderBy("period")
+    DDL) from an item-grain ``cohort_base`` of ``STATUSES``.
+
+    One conditional aggregate per (period, item), each cohort collected
+    per period and exploded (``explode_outer``, so an absent cohort is
+    one NULL row). That is the reference's item cross-combination of
+    FULL JOIN USING(period): max(n,1) * max(r,1) * max(f,1) rows for a
+    period with n new, r returning and f refunded items. Projected into
+    the DDL's column names and types (counts int4, revenues bigint)."""
+
+    def items_of(name: str) -> Column:
+        count, total, item = COHORTS[name].columns
+        entry = F.struct(F.col("item_id").alias(item), count, total)
+        return F.collect_list(F.when(F.col(count).isNotNull(), entry)).alias(name)
+
+    per_period = (
+        _cohort_aggregate(items, ["period", "item_id"])
+        .groupBy("period", "__unmatched")
+        .agg(*[items_of(name) for name in COHORTS])
     )
-    return _mart_columns(joined)
-
-
-def _mart_columns(joined: DataFrame) -> DataFrame:
-    """Project the period-joined item cohorts into the
-    ``creating_retention.sql`` DDL's column names and types."""
+    for name in COHORTS:
+        per_period = per_period.withColumn(name, F.explode_outer(name))
+    joined = per_period.select(
+        "period", *[f"{name}.*" for name in COHORTS]
+    ).orderBy("period")
     return joined.select(
         F.col("new_cust_count").cast("int").alias("new_customers_count"),
         F.col("returned_cust_count").cast("int").alias("returning_customers_count"),
@@ -259,99 +284,23 @@ def _mart_columns(joined: DataFrame) -> DataFrame:
     )
 
 
-def _cohort_aggregate(df: DataFrame, keys: list[str]) -> DataFrame:
-    """The three cohorts of ``new_customers`` / ``returned_customers`` /
-    ``refunded_customers`` as one conditional aggregate per ``keys`` over
-    a (status, customer_id, period, cnt, revenue) frame, with their
-    column names and types. A cohort absent from a group gives NULL, not
-    0, as the reference's FULL JOIN does.
-
-    A FULL JOIN never matches NULL keys, so each cohort's NULL-period
-    rows stay rows of their own there; grouping NULL periods by cohort
-    (``__unmatched``) keeps them apart here too."""
-    shipped = F.col("status") == "shipped"
-    new = shipped & (F.col("cnt") == 1)
-    ret = shipped & (F.col("cnt") > 1)
-    ref = F.col("status") == "refunded"
-    cohort = F.when(ref, "ref").when(new, "new").otherwise("ret")
-
-    def if_present(member, agg):
-        return F.when(F.count(F.when(member, 1)) > 0, agg)
-
-    unmatched = F.when(F.col("period").isNull(), cohort).alias("__unmatched")
-    return df.groupBy(*keys, unmatched).agg(
-        if_present(new, F.count(F.when(new, F.col("customer_id")))).alias("new_cust_count"),
-        F.sum(F.when(new, F.col("revenue"))).alias("new_cust_revenue"),
-        if_present(ret, F.count(F.when(ret, F.col("customer_id")))).alias("returned_cust_count"),
-        F.sum(F.when(ret, F.col("revenue"))).alias("returned_revenue"),
-        if_present(ref, F.count(F.when(ref, 1))).alias("cust_with_refunds"),
-        F.sum(F.when(ref, F.col("cnt"))).alias("total_refunds"),
-    )
-
-
 @contextlib.contextmanager
 def retention_marts(
     v2: DataFrame, weeks: DataFrame
 ) -> Iterator[tuple[DataFrame, DataFrame]]:
     """``(retention_compact, f_customer_retention)`` from one persisted
-    classification frame, released when the block exits::
+    item-grain ``cohort_base``, released when the block exits::
 
         with retention_marts(v2, weeks) as (compact, mart):
             ...write both...
 
-    Equal in schema and rows to ``assemble_retention_compact`` and
-    ``assemble_retention_mart`` over the per-cohort operators. The frame
-    is ``cohort_base`` for both statuses at item grain: shipped and
-    refunded rows, one ``assign_week_period``, one aggregate per
-    (status, customer, date, period, item).
-
-    - compact: cnt and revenue are additive over items, so the frame
-      re-aggregated to customer grain is the customer-grain cohort base;
-      then one conditional aggregate per period.
-    - mart: one conditional aggregate per (period, item), each cohort
-      collected per period and exploded (``explode_outer``, so an absent
-      cohort is one NULL row). That is the reference's item
-      cross-combination of FULL JOIN USING(period): max(n,1) * max(r,1)
-      * max(f,1) rows for a period with n new, r returning and f
-      refunded items.
-    """
-    frame = (
-        assign_week_period(
-            v2.filter(F.col("status").isin("shipped", "refunded")), weeks
-        )
-        .groupBy("status", "customer_id", "date_time", "period", "item_id")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum("payment_amount").alias("revenue"),
-        )
-        .persist()
-    )
+    cnt and revenue are additive over items, so the frame re-aggregated
+    to customer grain is the compact mart's customer-grain base."""
+    items = cohort_base(v2, weeks, STATUSES, item=True).persist()
     try:
-        customers = frame.groupBy("status", "customer_id", "date_time", "period").agg(
+        customers = items.groupBy("status", "customer_id", "date_time", "period").agg(
             F.sum("cnt").alias("cnt"), F.sum("revenue").alias("revenue")
         )
-        compact = (
-            _cohort_aggregate(customers, ["period"])
-            .drop("__unmatched")
-            .orderBy("period")
-        )
-
-        def items_of(count: str, item: str, total: str):
-            entry = F.struct(F.col("item_id").alias(item), count, total)
-            return F.collect_list(F.when(F.col(count).isNotNull(), entry))
-
-        per_period = _cohort_aggregate(frame, ["period", "item_id"]).groupBy(
-            "period", "__unmatched"
-        ).agg(
-            items_of("new_cust_count", "item_new", "new_cust_revenue").alias("new"),
-            items_of("returned_cust_count", "item_ret", "returned_revenue").alias("ret"),
-            items_of("cust_with_refunds", "item_ref", "total_refunds").alias("ref"),
-        )
-        for c in ("new", "ret", "ref"):
-            per_period = per_period.withColumn(c, F.explode_outer(c))
-        mart = _mart_columns(
-            per_period.select("period", "new.*", "ret.*", "ref.*").orderBy("period")
-        )
-        yield compact, mart
+        yield retention_compact(customers), retention_mart(items)
     finally:
-        frame.unpersist()
+        items.unpersist()

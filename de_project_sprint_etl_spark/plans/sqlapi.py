@@ -40,9 +40,9 @@ def create_views(spark: SparkSession, sf_dir: str) -> None:
 
 
 #: The compact weekly retention mart as Spark SQL TEXT — the same
-#: semantics as operators/retention.py (reference
-#: loading_retention_mart.sql:2-3 over new/returned/refunded cohorts),
-#: expressed the way a reference user would write it.
+#: values as ``retention.retention_compact``, written the way a reference
+#: user would: new/returned/refunded cohort CTEs chained by FULL JOIN
+#: (reference loading_retention_mart.sql:2-3).
 SPARK_SQL_RETENTION_COMPACT = """
 WITH wk AS (
   SELECT date_trunc('week', start_date) AS wkk, start_date, end_date, period

@@ -564,17 +564,18 @@ def q_streaming_retention_compact(spark: SparkSession, sf_dir: str) -> DataFrame
     the increment files (``maxFilesPerTrigger=2`` ⇒ a real multi-batch
     drain, not one big gulp) + ``foreachBatch`` appending each
     micro-batch EXACTLY-ONCE (batchId-keyed subdir + overwrite — a
-    retried batch rewrites, never duplicates), then the identical pure
-    operator pipeline (plans/testdata.retention_compact_from) over
-    snapshot ∪ drained increments. Hash-equal to the batch oracle
-    because the C5 merge is a union (arrival-order-independent) and the
-    mart is computed after the drain — the idempotent-merge fixed point
-    the reference's README promises, proven on the streaming path."""
+    retried batch rewrites, never duplicates), then the batch query's
+    operators (``retention.cohort_base`` into
+    ``retention.retention_compact``) over snapshot ∪ drained increments.
+    Hash-equal to the batch oracle because the C5 merge is a union
+    (arrival-order-independent) and the mart is computed after the
+    drain — the idempotent-merge fixed point the reference's README
+    promises, proven on the streaming path."""
     import shutil
 
-    from de_project_sprint_etl_spark.operators import facts
+    from de_project_sprint_etl_spark.operators import facts, retention
     from de_project_sprint_etl_spark.plans.testdata import (
-        retention_compact_from,
+        double_revenues,
         weeks_dim_cached,
     )
 
@@ -618,7 +619,10 @@ def q_streaming_retention_compact(spark: SparkSession, sf_dir: str) -> DataFrame
     v2 = facts.merge_snapshot_increment(snapshot, increments).withColumn(
         "payment_amount", F.col("payment_amount").cast("decimal(18,2)")
     )
-    return retention_compact_from(v2, weeks_dim_cached(spark, sf_dir))
+    base = retention.cohort_base(
+        v2, weeks_dim_cached(spark, sf_dir), retention.STATUSES, item=False
+    )
+    return double_revenues(retention.retention_compact(base))
 
 
 # --- exactly-once streaming ingestion into a manifest view (round 11) -------

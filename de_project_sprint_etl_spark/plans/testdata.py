@@ -642,63 +642,63 @@ def q_week_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assigned.select("o_orderkey", "period")
 
 
+def _cohort(spark: SparkSession, sf_dir: str, name: str, item: bool) -> DataFrame:
+    """One ``retention.COHORTS`` cohort per period[, item] over the
+    materialized order log, reading only that cohort's status."""
+    base = retention.cohort_base(
+        order_log_v2_decimal(spark, sf_dir),
+        weeks_dim_cached(spark, sf_dir),
+        (retention.COHORTS[name].status,),
+        item,
+    )
+    return retention.cohort(base, name, ["period"] + (["item_id"] if item else []))
+
+
+def double_revenues(df: DataFrame) -> DataFrame:
+    """The oracle's DOUBLE revenue sums for whichever of the new and
+    returning revenues ``df`` carries."""
+    return df.withColumns(
+        {
+            c: F.col(c).cast("double")
+            for c in ("new_cust_revenue", "returned_revenue")
+            if c in df.columns
+        }
+    )
+
+
 @register("new_customers", sql_new_cust(item=True))
 def q_new_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7/A9/F1/J2: new-customer cohort per (period, item)
     (reference new_customers.sql:1-9)."""
-    out = retention.new_customers(
-        order_log_v2_decimal(spark, sf_dir), weeks_dim_cached(spark, sf_dir), item=True
-    )
-    return out.withColumn(
-        "new_cust_revenue", F.col("new_cust_revenue").cast("double")
-    ).withColumnRenamed("item_new", "item_new")
+    return double_revenues(_cohort(spark, sf_dir, "new", item=True))
 
 
 @register("new_customers_compact", sql_new_cust(item=False))
 def q_new_customers_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """new_cust_compact (reference new_customers.sql:11-19)."""
-    out = retention.new_customers(
-        order_log_v2_decimal(spark, sf_dir), weeks_dim_cached(spark, sf_dir), item=False
-    )
-    return out.withColumn(
-        "new_cust_revenue", F.col("new_cust_revenue").cast("double")
-    )
+    return double_revenues(_cohort(spark, sf_dir, "new", item=False))
 
 
 @register("returned_customers", sql_returned_cust(item=True))
 def q_returned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8 HAVING count>1 cohort (reference returned_customers.sql:1-9)."""
-    out = retention.returned_customers(
-        order_log_v2_decimal(spark, sf_dir), weeks_dim_cached(spark, sf_dir), item=True
-    )
-    return out.withColumn(
-        "returned_revenue", F.col("returned_revenue").cast("double")
-    )
+    return double_revenues(_cohort(spark, sf_dir, "ret", item=True))
 
 
 @register("returned_customers_compact", sql_returned_cust(item=False))
 def q_returned_customers_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = retention.returned_customers(
-        order_log_v2_decimal(spark, sf_dir), weeks_dim_cached(spark, sf_dir), item=False
-    )
-    return out.withColumn(
-        "returned_revenue", F.col("returned_revenue").cast("double")
-    )
+    return double_revenues(_cohort(spark, sf_dir, "ret", item=False))
 
 
 @register("refunded_customers", sql_refunded_cust(item=True))
 def q_refunded_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2 refunded cohort (reference refunded_customers.sql:1-8)."""
-    return retention.refunded_customers(
-        order_log_v2_decimal(spark, sf_dir), weeks_dim_cached(spark, sf_dir), item=True
-    )
+    return _cohort(spark, sf_dir, "ref", item=True)
 
 
 @register("refunded_customers_compact", sql_refunded_cust(item=False))
 def q_refunded_customers_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return retention.refunded_customers(
-        order_log_v2_decimal(spark, sf_dir), weeks_dim_cached(spark, sf_dir), item=False
-    )
+    return _cohort(spark, sf_dir, "ref", item=False)
 
 
 SQL_RETENTION_COMPACT = f"""
@@ -713,34 +713,20 @@ FULL JOIN ({sql_refunded_cust(item=False)}) f
 """
 
 
-def retention_compact_from(v2: DataFrame, weeks: DataFrame) -> DataFrame:
-    """The compact retention mart over an arbitrary merged order log —
-    shared by the batch flagship below and its streaming-executed twin
-    (plans/streamq.q_streaming_retention_compact), so both paths run the
-    IDENTICAL operator pipeline and can only differ in how ``v2`` was
-    assembled."""
-    shipped = retention.cohort_base(v2, weeks, "shipped", item=False).persist()
-    new_c = retention.new_customers(base=shipped, item=False).withColumn(
-        "new_cust_revenue", F.col("new_cust_revenue").cast("double")
-    )
-    ret_c = retention.returned_customers(base=shipped, item=False).withColumn(
-        "returned_revenue", F.col("returned_revenue").cast("double")
-    )
-    ref_c = retention.refunded_customers(v2, weeks, item=False)
-    return retention.assemble_retention_compact(new_c, ret_c, ref_c)
-
-
 @register("retention_compact", SQL_RETENTION_COMPACT)
 def q_retention_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 chained FULL JOIN USING(period): the flagship compact retention
-    mart (reference loading_retention_mart.sql:2-3)."""
-    # v2/weeks are materialized parquet scans — persisting them costs
-    # more (cache write) than re-scanning; only the shipped inner
-    # aggregation, shared by new + returned, is worth caching
-    # (inside retention_compact_from).
-    return retention_compact_from(
-        order_log_v2_decimal(spark, sf_dir), weeks_dim_cached(spark, sf_dir)
+    """J3: the flagship compact retention mart (reference
+    loading_retention_mart.sql:2-3), the reference's chained FULL JOIN
+    USING(period) as one conditional aggregate. v2/weeks are
+    materialized parquet scans and the customer-grain base has one
+    consumer, so nothing is persisted."""
+    base = retention.cohort_base(
+        order_log_v2_decimal(spark, sf_dir),
+        weeks_dim_cached(spark, sf_dir),
+        retention.STATUSES,
+        item=False,
     )
+    return double_revenues(retention.retention_compact(base))
 
 
 @register(
@@ -756,7 +742,7 @@ def q_retention_compact_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``monotonically_increasing_id()`` assigned above the sort (it is
     nondeterministic, so Catalyst cannot push it below), then ranked.
     ``pos`` only equals the oracle's ``ROW_NUMBER() OVER (ORDER BY
-    period)`` when ``assemble_retention_compact`` actually sorts by
+    period)`` when ``retention.retention_compact`` actually sorts by
     period (reference loading_retention_mart.sql:3 ORDER BY) — removing
     that ``orderBy`` fails this entry (pinned in tests/test_operators.py).
     The unpartitioned stamp window is verification-only scaffolding over
@@ -825,21 +811,20 @@ FULL JOIN f ON COALESCE(n.period, r.period) = f.period
 
 @register("retention_mart", SQL_RETENTION_MART)
 def q_retention_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """f_customer_retention: item-level cohorts full-joined on period alone
-    (items cross-combine per period, faithful to reference
-    loading_retention_mart.sql:5-8), projected into the
+    """f_customer_retention: item-level cohorts combined on period alone
+    (items cross-combine per period, as the reference's FULL JOIN in
+    loading_retention_mart.sql:5-8 does), projected into the
     creating_retention.sql:2-13 DDL shape. Item space capped at ITEM_CAP
     to bound the reference's unbounded cross-combination on TPC-H
     cardinalities."""
-    # no persist on v2: the item_id cap now pushes into the materialized
-    # log's parquet scan (a persist would cache the UNFILTERED columns)
+    # no persist: the item_id cap pushes into the materialized log's
+    # parquet scan (a persist would cache the UNFILTERED columns), and
+    # the item-grain base has one consumer
     v2 = order_log_v2_decimal(spark, sf_dir).filter(F.col("item_id") <= ITEM_CAP)
-    weeks = weeks_dim_cached(spark, sf_dir)
-    shipped = retention.cohort_base(v2, weeks, "shipped", item=True).persist()
-    new = retention.new_customers(base=shipped, item=True)
-    ret = retention.returned_customers(base=shipped, item=True)
-    ref = retention.refunded_customers(v2, weeks, item=True)
-    return retention.assemble_retention_mart(new, ret, ref)
+    base = retention.cohort_base(
+        v2, weeks_dim_cached(spark, sf_dir), retention.STATUSES, item=True
+    )
+    return retention.retention_mart(base)
 
 
 @register(

@@ -176,9 +176,14 @@ def test_cohorts_disjoint_and_golden(spark):
     log = order_log(spark)
     dates = log.select(F.col("date_time").alias("fact_date")).distinct()
     weeks = retention.build_weeks(dates)
-    new = retention.new_customers(log, weeks, item=False).collect()
-    ret = retention.returned_customers(log, weeks, item=False).collect()
-    ref = retention.refunded_customers(log, weeks, item=False).collect()
+    new, ret, ref = (
+        retention.cohort(
+            retention.cohort_base(log, weeks, (c.status,), item=False),
+            name,
+            ["period"],
+        ).collect()
+        for name, c in retention.COHORTS.items()
+    )
     assert {(r.period, r.new_cust_count) for r in new} == {(1, 1), (3, 1)}
     assert {(r.period, r.returned_cust_count) for r in ret} == {(1, 1)}
     assert {(r.period, r.cust_with_refunds, r.total_refunds) for r in ref} == {
@@ -195,15 +200,74 @@ def test_retention_compact_nulls_for_missing_weeks(spark):
     log = order_log(spark)
     dates = log.select(F.col("date_time").alias("fact_date")).distinct()
     weeks = retention.build_weeks(dates)
-    out = retention.assemble_retention_compact(
-        retention.new_customers(log, weeks, item=False),
-        retention.returned_customers(log, weeks, item=False),
-        retention.refunded_customers(log, weeks, item=False),
+    out = retention.retention_compact(
+        retention.cohort_base(log, weeks, retention.STATUSES, item=False)
     ).collect()
     by_period = {r.period: r for r in out}
     assert by_period[2].new_cust_count is None  # week 2 had only refunds
     assert by_period[2].cust_with_refunds == 1
     assert by_period[3].returned_cust_count is None
+
+
+def reference_marts() -> tuple[str, str]:
+    """The reference's cohort and mart SQL (new_customers.sql,
+    returned_customers.sql, refunded_customers.sql and
+    loading_retention_mart.sql) over DuckDB tables ``log`` and ``weeks``:
+    the compact mart and the item mart. Weeks join by equality on the
+    week truncation plus a range filter, not a bare BETWEEN (DuckDB
+    1.0.0's IEJoin livelock, see plans/testdata.py SQL_WEEKS_K)."""
+
+    def inner(status, item):
+        keys = "v.customer_id, v.date_time, w.period" + (", v.item_id" if item else "")
+        return f"""
+SELECT {keys}, COUNT(*) AS cnt, SUM(v.payment_amount) AS revenue
+FROM log v LEFT JOIN weeks w
+  ON CAST(DATE_TRUNC('week', v.date_time) AS DATE) = w.wk
+ AND v.date_time BETWEEN w.start_date AND w.end_date
+WHERE v.status = '{status}'
+GROUP BY {keys}"""
+
+    def cohorts(item):
+        grp = "period, item_id" if item else "period"
+
+        def it(col):
+            return f"item_id AS {col}," if item else ""
+
+        return f"""
+n AS (SELECT period, {it('item_new')} COUNT(customer_id) AS new_cust_count,
+             SUM(revenue) AS new_cust_revenue
+      FROM ({inner('shipped', item)} HAVING COUNT(*) = 1) c GROUP BY {grp}),
+r AS (SELECT period, {it('item_ret')} COUNT(customer_id) AS returned_cust_count,
+             SUM(revenue) AS returned_revenue
+      FROM ({inner('shipped', item)} HAVING COUNT(*) > 1) c GROUP BY {grp}),
+f AS (SELECT period, {it('item_ref')} COUNT(*) AS cust_with_refunds,
+             CAST(SUM(cnt) AS BIGINT) AS total_refunds
+      FROM ({inner('refunded', item)}) c GROUP BY {grp})"""
+
+    joins = """
+FROM n
+FULL JOIN r ON n.period = r.period
+FULL JOIN f ON COALESCE(n.period, r.period) = f.period"""
+    compact = f"""
+WITH {cohorts(False)}
+SELECT COALESCE(n.period, r.period, f.period) AS period,
+       n.new_cust_count, n.new_cust_revenue,
+       r.returned_cust_count, r.returned_revenue,
+       f.cust_with_refunds, f.total_refunds {joins}"""
+    mart = f"""
+WITH {cohorts(True)}
+SELECT CAST(n.new_cust_count AS INT) AS new_customers_count,
+       CAST(r.returned_cust_count AS INT) AS returning_customers_count,
+       CAST(f.cust_with_refunds AS INT) AS refunded_customer_count,
+       'weekly' AS period_name,
+       CAST(COALESCE(n.period, r.period, f.period) AS INT) AS period_id,
+       CAST(n.item_new AS INT) AS item_id_new_cust,
+       CAST(r.item_ret AS INT) AS item_id_returned_cust,
+       CAST(f.item_ref AS INT) AS item_id_refunded_cust,
+       CAST(ROUND(n.new_cust_revenue) AS BIGINT) AS new_customers_revenue,
+       CAST(ROUND(r.returned_revenue) AS BIGINT) AS returning_customers_revenue,
+       CAST(f.total_refunds AS INT) AS customers_refunded {joins}"""
+    return compact, mart
 
 
 # A date no week covers: rows on it get a NULL period.
@@ -263,10 +327,16 @@ OFF_CALENDAR = D(2023, 3, 6)
     ],
 )
 def test_retention_marts_equal_per_cohort_composition(spark, extra):
-    """The one-frame operator the pipeline writes both marts with equals
-    the reference composition (three cohorts per grain, chained FULL
-    JOINs USING(period)) in schema and rows. Amounts are decimal, as in
-    the pipeline's merged log, so revenue sums are exact."""
+    """Both marts, from the pipeline's one persisted frame and from the
+    registered queries' direct base, equal the reference SQL run by
+    DuckDB over the same rows (values canonicalized as
+    tools/oracle_check.py does). Amounts are decimal, as in the
+    pipeline's merged log, so revenue sums are exact."""
+    import duckdb
+    import pyarrow as pa
+
+    from tools.oracle_check import compare_frames
+
     base = order_log(spark)
     log = base.unionByName(spark.createDataFrame(extra, base.schema)).withColumn(
         "payment_amount", F.col("payment_amount").cast("decimal(18,2)")
@@ -274,21 +344,47 @@ def test_retention_marts_equal_per_cohort_composition(spark, extra):
     dates = log.select(F.col("date_time").alias("fact_date")).distinct()
     weeks = retention.build_weeks(dates.filter(F.col("fact_date") != OFF_CALENDAR))
 
-    def cohorts(item):
-        return (
-            retention.new_customers(log, weeks, item=item),
-            retention.returned_customers(log, weeks, item=item),
-            retention.refunded_customers(log, weeks, item=item),
-        )
-
-    want = (
-        retention.assemble_retention_compact(*cohorts(False)),
-        retention.assemble_retention_mart(*cohorts(True)),
+    con = duckdb.connect()
+    con.register(
+        "log",
+        pa.Table.from_pylist(
+            [r.asDict() for r in log.collect()],
+            pa.schema(
+                [
+                    ("customer_id", pa.int64()),
+                    ("date_time", pa.date32()),
+                    ("item_id", pa.int32()),
+                    ("payment_amount", pa.decimal128(18, 2)),
+                    ("status", pa.string()),
+                ]
+            ),
+        ),
     )
-    with retention.retention_marts(log, weeks) as got:
-        for g, w in zip(got, want):
-            assert g.schema == w.schema
-            assert sorted(g.collect(), key=repr) == sorted(w.collect(), key=repr)
+    # reference date_periods.sql: min/max date and a period per week
+    con.sql(f"""
+CREATE TABLE weeks AS
+SELECT MIN(d) AS start_date, MAX(d) AS end_date,
+       CAST(ROW_NUMBER() OVER (ORDER BY MIN(d)) AS BIGINT) AS period,
+       CAST(DATE_TRUNC('week', d) AS DATE) AS wk
+FROM (SELECT DISTINCT date_time AS d FROM log
+      WHERE date_time <> DATE '{OFF_CALENDAR}') dates
+GROUP BY DATE_TRUNC('week', d)
+""")
+    want = [con.sql(q).arrow().to_pandas() for q in reference_marts()]
+
+    direct = (
+        retention.retention_compact(
+            retention.cohort_base(log, weeks, retention.STATUSES, item=False)
+        ),
+        retention.retention_mart(
+            retention.cohort_base(log, weeks, retention.STATUSES, item=True)
+        ),
+    )
+    with retention.retention_marts(log, weeks) as pipeline:
+        for got in (pipeline, direct):
+            for g, w in zip(got, want):
+                verdict = compare_frames(g.toPandas(), w)
+                assert verdict["hash_match"], verdict["err"]
 
 
 def test_merge_snapshot_increment_idempotent_and_no_dupes(spark):

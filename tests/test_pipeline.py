@@ -269,3 +269,21 @@ def test_orc_round_trip_with_pushdown(spark, tmp_path):
         .toString()
     )
     assert "PushedFilters: [IsNotNull(o_orderpriority), EqualTo(o_orderpriority,1-URGENT)" in plan, plan
+
+
+def test_pipeline_bench_without_corpus_names_generator(tmp_path):
+    """tools/pipeline_bench.py on a dir without orders.parquet exits
+    non-zero before starting Spark, naming the corpus generator and the
+    sf_dir argument."""
+    import subprocess
+    import sys
+
+    tool = Path(__file__).resolve().parents[1] / "tools" / "pipeline_bench.py"
+    done = subprocess.run(
+        [sys.executable, str(tool), str(tmp_path), "--fixed-point"],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert done.returncode != 0
+    assert "python tools/gen_sf1.py" in done.stderr, done.stderr
+    assert "sf_dir" in done.stderr, done.stderr
+    assert "Traceback" not in done.stderr, done.stderr

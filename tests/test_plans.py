@@ -640,8 +640,13 @@ def test_cohort_status_filter_pushes_into_materialized_log(spark):
     spark.catalog.clearCache()
     v2 = td.order_log_v2_decimal(spark, SF)
     weeks = td.weeks_dim_cached(spark, SF)
-    plan = plan_of(retention.cohort_base(v2, weeks, "shipped", item=False))
+    plan = plan_of(retention.cohort_base(v2, weeks, ("shipped",), item=False))
     assert "EqualTo(status,shipped)" in plan, plan
+    # both marts read one two-status frame: the IN list must reach the
+    # same scan
+    plan = plan_of(retention.cohort_base(v2, weeks, retention.STATUSES, item=True))
+    scan = next(node for node in plan.split("\n\n") if "/order_log_v2]" in node)
+    assert "PushedFilters: [In(status, [refunded,shipped])]" in scan, plan
 
 
 def test_scan_coerces_drifted_fixture_types(spark, tmp_path):

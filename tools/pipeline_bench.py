@@ -40,14 +40,15 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
 
 SF_DIR = next(
-    (a for a in sys.argv[1:] if not a.startswith("--")), "/root/repo/.cache/sf1"
+    (a for a in sys.argv[1:] if not a.startswith("--")),
+    os.path.join(REPO, ".cache", "sf1"),
 )
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _src_dir() -> str:
@@ -130,6 +131,12 @@ TO '{src}/price_log.csv' (HEADER FALSE)
 
 
 def main() -> None:
+    if not os.path.exists(os.path.join(SF_DIR, "orders.parquet")):
+        raise SystemExit(
+            f"pipeline_bench: no orders.parquet in {SF_DIR}; build the sf1 "
+            "corpus with `python tools/gen_sf1.py`, or pass a corpus dir "
+            "as the sf_dir argument"
+        )
     src = _src_dir()
     if not os.path.exists(os.path.join(src, "user_order_log.csv")):
         t0 = time.time()
