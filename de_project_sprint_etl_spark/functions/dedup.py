@@ -32,7 +32,7 @@ the generation-managed persist (``functions/caching.py``: at most one
 cached generation per session tag, previous unpersisted on
 re-invocation); the rest rely on ``spark.catalog.clearCache()`` between
 queries (what bench.py and the driver harness do). Only ``dup_groups``
-unpersists internally (its edge cache dies inside the loop it serves).
+needs neither: its edge frame and labels are local checkpoints.
 """
 
 from __future__ import annotations
@@ -515,84 +515,83 @@ def dup_groups(
     by iterative min-label propagation, i.e. what a dedup pipeline
     actually keys its "keep one per group" decision on.
 
-    Each round joins labels to the (symmetrized) edge list, takes the
-    min neighbor label per vertex, and stops when no label changed —
-    O(component diameter) rounds; dedup graphs are near-cliques so this
-    is a handful. ``localCheckpoint`` truncates the growing loop lineage
-    (at cluster scale: ``checkpoint`` to reliable storage).
+    The edge list is symmetrized with self edges: every pair gives
+    ``(a,b), (b,a), (a,a), (b,b)``, so each vertex is its own
+    neighbour. A round is then one join of the labels to the edges and
+    one aggregate per vertex: ``min(label)`` is the new label and
+    ``min(label)`` over the self edge is the old one, so the count of
+    changed labels needs no second join. Round 1 reads the edges alone
+    (every vertex's initial label is its id). Stops when no label
+    changed: O(component diameter) rounds; dedup graphs are near-cliques
+    so this is a handful. Round 1 counts as one of the ``max_iter``
+    rounds.
+
+    The edge frame and each round's labels are ``localCheckpoint`` s,
+    so a round's plan is a join of two ``LogicalRDD`` leaves, not a join
+    stacked on the pair pipeline that Catalyst would re-analyze every
+    round (at cluster scale: ``checkpoint`` to reliable storage). The
+    edge checkpoint is lazy: round 1's job materializes it, so the pair
+    pipeline runs once and costs no job of its own. The label
+    checkpoints are eager (each round's job carries its changed-count).
+    Nothing is cached: the checkpointed blocks are released by the
+    ``ContextCleaner`` once the frames that hold them are garbage, on
+    return and on the non-convergence error alike.
 
     ``simple_pairs=True`` asserts the input is already one DISTINCT row
     per unordered pair with ``id_a < id_b`` (every registered pair
     producer — the LSH banders' ``dropDuplicates`` + ``a.id < b.id``
     join, the cosine single-bucket join, PPJoin's final ``distinct`` —
-    guarantees this): the symmetrized edge set is then distinct by
-    construction and the collapse skips a full shuffle + hash aggregate
-    of the edge set (r12). Unlike ``graph.triangle_count``'s
-    ``simple_symmetric``, a violated invariant here cannot corrupt the
-    output — min-label propagation is idempotent under duplicate
-    edges — it only wastes the work the flag saves.
+    guarantees this): the symmetrized edge set is then distinct apart
+    from repeated self edges, and the collapse skips a full shuffle +
+    hash aggregate of the edge set (r12). Unlike
+    ``graph.triangle_count``'s ``simple_symmetric``, a violated
+    invariant here cannot corrupt the output — min-label propagation is
+    idempotent under duplicate edges — it only wastes the work the flag
+    saves.
 
     Output: ``id, group_id, group_size`` for every vertex in ``pairs``
     (``group_id`` = min id in the component).
     """
+    if max_iter < 1:
+        raise ValueError(f"dup_groups needs max_iter >= 1, got {max_iter}")
+    from pyspark.sql import Observation
+
     # symmetrize with one explode, not union(fwd, rev): a union scans the
     # upstream pair pipeline (often an expensive similarity join) once
     # per branch, an explode scans it once.
+    a, b = F.col(id_a), F.col(id_b)
+    directed = [(a, b), (b, a), (a, a), (b, b)]
     edges = pairs.select(
         F.explode(
-            F.array(
-                F.struct(F.col(id_a).alias("s"), F.col(id_b).alias("d")),
-                F.struct(F.col(id_b).alias("s"), F.col(id_a).alias("d")),
-            )
+            F.array(*(F.struct(s.alias("s"), d.alias("d")) for s, d in directed))
         ).alias("e")
     ).select("e.s", "e.d")
     if not simple_pairs:
         edges = edges.distinct()
-    edges = edges.persist()
-    from pyspark.sql import Observation
-
-    changed = 0
-    # the labels below are eagerly checkpointed, so nothing downstream
-    # reads the cached edge set: release it on every exit, errors too
-    try:
+    edges = edges.localCheckpoint(eager=False)
+    # round 1: the source label of every edge is its source id
+    src = edges.withColumn("label", F.col("s"))
+    for i in range(max_iter):
+        # the changed-count rides the eager checkpoint as an Observation:
+        # one action per round, not checkpoint + count (measured r11: the
+        # count was a full second action whose only output was one scalar)
+        obs = Observation(f"dup_groups_changed_{i}")
         labels = (
-            edges.select(F.col("s").alias("id"))
-            .distinct()
-            .withColumn("label", F.col("id"))
+            src.groupBy(F.col("d").alias("id"))
+            .agg(
+                F.min("label").alias("label"),
+                F.min(F.when(F.col("s") == F.col("d"), F.col("label"))).alias("old"),
+            )
+            .observe(
+                obs,
+                F.sum((F.col("label") != F.col("old")).cast("long")).alias("n"),
+            )
             .localCheckpoint()
         )
-        for i in range(max_iter):
-            prop = (
-                edges.join(labels, edges["s"] == labels["id"])
-                .groupBy("d")
-                .agg(F.min("label").alias("nlabel"))
-                .withColumnRenamed("d", "id")
-            )
-            # the changed-count rides the eager checkpoint as an Observation
-            # (one job per round, not checkpoint + count — measured r11:
-            # the convergence count was a full second job per round whose
-            # only output was one scalar)
-            obs = Observation(f"dup_groups_changed_{i}")
-            new_labels = (
-                labels.withColumnRenamed("label", "old")
-                .join(prop, "id", "left")
-                .select(
-                    "id",
-                    F.least(F.col("old"), F.coalesce("nlabel", "old")).alias("label"),
-                    "old",
-                )
-                .observe(
-                    obs,
-                    F.sum((F.col("label") != F.col("old")).cast("long")).alias("n"),
-                )
-                .localCheckpoint()
-            )
-            changed = int(obs.get["n"] or 0)
-            labels = new_labels.drop("old")
-            if changed == 0:
-                break
-    finally:
-        edges.unpersist()
+        changed = int(obs.get["n"] or 0)
+        if changed == 0:
+            break
+        src = edges.join(labels.select("id", "label"), edges["s"] == labels["id"])
     if changed != 0:
         raise RuntimeError(
             f"dup_groups did not converge within max_iter={max_iter} rounds "

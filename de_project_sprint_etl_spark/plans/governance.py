@@ -2426,8 +2426,8 @@ def q_dup_group_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _sim.cosine_near_dup_pairs(
         emb_with_copies(spark, sf_dir), PLANES, min_cos=0.95
     )
-    # inline cosine pairs: keep the distinct (see q_dedup_groups note)
-    groups = _dedup2.dup_groups(pairs)
+    # inline cosine pairs are already distinct (see q_dedup_groups note)
+    groups = _dedup2.dup_groups(pairs, simple_pairs=True)
     sized = groups.select("group_id", "group_size").dropDuplicates(["group_id"])
     return sized.groupBy("group_size").agg(
         F.count(F.lit(1)).alias("n_groups"),

@@ -81,6 +81,68 @@ def test_dup_groups_raises_when_round_budget_too_small(spark):
         dedup.dup_groups(chain, max_iter=3)
 
 
+def test_dup_groups_round_budget_boundary(spark):
+    """A path of k edges needs k rounds to carry the min label to its
+    far end plus one round that changes nothing: it converges with
+    ``max_iter=k+1`` and raises with ``max_iter=k``. Round 1 (the
+    aggregate straight over the edges) is one of the budgeted rounds."""
+    import pytest
+
+    k = 6
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(k)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="converge"):
+        dedup.dup_groups(path, max_iter=k)
+    got = {r.id: (r.group_id, r.group_size)
+           for r in dedup.dup_groups(path, max_iter=k + 1).collect()}
+    assert got == {i: (0, k + 1) for i in range(k + 1)}
+
+
+def _two_components(spark):
+    return spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
+    )
+
+
+def test_dup_groups_job_count(spark):
+    """Spark jobs for one ``dup_groups`` plus its ``collect`` on the
+    two-component graph (4 rounds: the path {1,2,3,4} needs 3 hops and
+    one round that changes nothing). A count, not a timing, so it pins
+    the per-round cost without flaking."""
+    sc = spark.sparkContext
+    group = "test_dup_groups_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        dedup.dup_groups(_two_components(spark)).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 20
+
+
+def test_dup_groups_leaves_no_cached_frames(spark):
+    """``dup_groups`` caches nothing, neither on return nor when it
+    raises on a too-small budget; the only RDDs it leaves registered are
+    its local checkpoints (one edge frame plus one per round), which the
+    ``ContextCleaner`` releases."""
+    import pytest
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    jsc = spark.sparkContext._jsc
+    dedup.dup_groups(_two_components(spark)).collect()
+    assert cache.isEmpty()
+    with pytest.raises(RuntimeError, match="converge"):
+        dedup.dup_groups(_two_components(spark), max_iter=2)
+    assert cache.isEmpty()
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(5):
+        dedup.dup_groups(_two_components(spark)).collect()
+    # per call: the edge frame and 4 rounds of labels
+    assert jsc.getPersistentRDDs().size() - before <= 5 * 5
+
+
 def _vec_df(spark, rows):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
